@@ -208,6 +208,15 @@ object Bench {
 
     val planByQuery = scala.collection.mutable.Map.empty[String, PlanStats]
     val jobsByQuery = scala.collection.mutable.Map.empty[String, JobStats]
+    // Classes compiled while each query ran (the driver-codegen layer),
+    // read off Spark's JVM-wide compile counter. Pass 1 counts the
+    // classes a query adds to the code cache in registry order, so their
+    // sum is the registry's distinct-class working set; later passes
+    // should add none while the cache cap holds it.
+    val compilesByQuery = scala.collection.mutable.Map.empty[String, Long]
+    var laterPassCompiles = 0L
+    def compiles: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def timeOnce(q: graft.queries.GraftQuery, collectPlan: Boolean,
         dir: String = sfDir): Sample = {
       // job-totals listener brackets the WHOLE query (construction side
@@ -222,6 +231,7 @@ object Bench {
         spark.sparkContext.addSparkListener(l)
         Some(l)
       } else None
+      val compiles0 = compiles
       val startMs = System.currentTimeMillis()
       val t0 = System.nanoTime()
       try {
@@ -240,7 +250,12 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
         Sample(-1.0, startMs, ok = false)
-      } finally listener.foreach(spark.sparkContext.removeSparkListener)
+      } finally {
+        listener.foreach(spark.sparkContext.removeSparkListener)
+        val n = compiles - compiles0
+        if (collectPlan) compilesByQuery(q.name) = n
+        else if (dir == sfDir) laterPassCompiles += n
+      }
     }
 
     // SPARK_GRAFT_BENCH_ONLY=q94,q107 (full or qNN-prefix names) narrows
@@ -373,6 +388,11 @@ object Bench {
       "\"" + q.name + "\":" + s.json)).mkString("{", ",", "}")
     val jobMap = registry.flatMap(q => jobsByQuery.get(q.name).map(s =>
       "\"" + q.name + "\":" + s.json)).mkString("{", ",", "}")
+    val compileMap = registry.flatMap(q => compilesByQuery.get(q.name).map(n =>
+      "\"" + q.name + "\":" + n)).mkString("{", ",", "}")
+    val codegenJson =
+      s""""codegen_compiles":$compileMap,""" +
+        s""""codegen_compiles_later_passes":$laterPassCompiles"""
     // PLAN DRIFT GATE (drift-immune regression signal): compare this
     // run's exchange counts and shuffle row counts against the
     // previously COMMITTED full map — wall-time regressions hide in
@@ -429,7 +449,7 @@ object Bench {
     java.nio.file.Files.writeString(diagPath,
       s"""{"full_names":$qsFull,""" +
         s""""median_total":$medTotal,"medians":$medMap,""" +
-        s""""npass":$nPass,"plan":$planMap,"job":$jobMap,""" +
+        s""""npass":$nPass,"plan":$planMap,"job":$jobMap,$codegenJson,""" +
         s""""plan_drift":${planDrift.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
         s""""scale":$scaleMap,"scale_drift":$scaleDriftJson,""" +
         s""""passes":$passes,"starts":$starts}""" + "\n")
@@ -470,7 +490,7 @@ object Bench {
           s""""plan_drift":${planDrift.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
           s""""scale_drift":$scaleDriftJson,""" +
           s""""queries":$qsFull,"medians":$medMap,"plan":$planMap,""" +
-          s""""job":$jobMap,"scale":$scaleMap}""" + "\n")
+          s""""job":$jobMap,$codegenJson,"scale":$scaleMap}""" + "\n")
     }
     // plan_drift rides the contract line as a COUNT (fixed-size): a
     // nonzero value tells the round reader to open BENCH_LOCAL.json's

@@ -164,20 +164,23 @@ object SpillProbe {
     }
   }
 
-  private def storeMain(args: Array[String]): Unit = {
-    val n = args.headOption.map(_.toLong).getOrElse(400000L)
-    val spark = SparkSession.builder()
-      // local[2], not [4]: the minhash object aggregate holds per-task
-      // sort buffers that 4 concurrent tasks cannot fit under the
-      // 512 MB floor even WITH spilling (the spill reader's own buffer
-      // allocation OOMs) — two tasks spill and survive
-      .master("local[2]")
-      .appName("graft-spill-store-probe")
+  /** The engine's session with the probe's overrides: 3 shuffle
+    * partitions (the suite runs `cpus`, so the checksums' partition-
+    * independence is exercised) and no broadcast joins, so the join
+    * shapes shuffle and sort. */
+  private def probeSession(appName: String, threads: Int): SparkSession =
+    GraftSession.builder(appName, threads)
       .config("spark.sql.shuffle.partitions", "3")
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
+
+  private def storeMain(args: Array[String]): Unit = {
+    val n = args.headOption.map(_.toLong).getOrElse(400000L)
+    // local[2], not [4]: the minhash object aggregate holds per-task
+    // sort buffers that 4 concurrent tasks cannot fit under the 512 MB
+    // floor even WITH spilling (the spill reader's own buffer allocation
+    // OOMs) — two tasks spill and survive
+    val spark = probeSession("graft-spill-store-probe", threads = 2)
     val spilled = new AtomicLong(0L)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
@@ -200,14 +203,7 @@ object SpillProbe {
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("store")) { storeMain(args.drop(1)); return }
     val n = args.headOption.map(_.toLong).getOrElse(3000000L)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-spill-probe")
-      .config("spark.sql.shuffle.partitions", "3")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = probeSession("graft-spill-probe", threads = 4)
     val spilled = new AtomicLong(0L)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {

@@ -114,13 +114,6 @@ object TextFunctions {
   def fingerprint(text: Column): Column =
     md5(lower(regexp_replace(text, "\\s+", " ")).cast("binary"))
 
-  /** Salted MinHash over md5 hex strings: min over shingles of
-    * md5(i || ':' || shingle). Lexicographic min over hex strings is
-    * engine-agnostic, which makes the DuckDB oracle exact. The production
-    * path at 100 TB would swap md5 for xxhash64 (cheaper), same shape. */
-  def minhashOverShingles(shingle: Column, salt: Int): Column =
-    md5(concat(lit(s"$salt:"), shingle).cast("binary"))
-
   /** PII patterns for [[redactPii]]. Deliberately engine-agnostic
     * regex: character classes, literal dots and bounded repetition only
     * — no `\b`/`\w`/`\s` shorthands (whose definitions differ between

@@ -2,7 +2,6 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing (SURVEY.md §2.10): media payloads are
   * opaque `binary` columns travelling next to a typed metadata struct.
@@ -26,15 +25,6 @@ import org.apache.spark.sql.types._
   * the payload row.
   */
 object Multimodal {
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false),      // image|audio|video
-    StructField("payload", BinaryType, nullable = true),    // opaque bytes
-    StructField("meta", StructType(Seq(
-      StructField("mime", StringType),
-      StructField("n_bytes", LongType),
-      StructField("checksum", StringType))))))
 
   /** Pack a text/binary source column into the media shape (test stand-in
     * for reading real media files; payload = UTF-8 bytes). */

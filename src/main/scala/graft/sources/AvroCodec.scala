@@ -38,8 +38,6 @@ object AvroCodec {
 
   case class TurnstileValue(station_id: Int, station_name: String, line: String)
 
-  case class WeatherValue(temperature: Float, status: String)
-
   case class EventKey(timestamp: Long)
 
   val arrivalValueSchema: String =
@@ -128,8 +126,9 @@ object AvroCodec {
 
   // --- typed decoders as Columns ---
   // Backed by the native codegen expression (AvroDecode): enum -> symbol
-  // name (P14) and null-on-corrupt come from AvroRuntime. The *Udf
-  // variants below are the boxed fallback (and document the old path).
+  // name (P14) and null-on-corrupt come from AvroRuntime.
+  // `decodeArrivalUdf` below is the boxed fallback, kept as the parity
+  // reference for the codegen path.
 
   val decodeArrival: Column => Column = AvroFunctions.decodeExpr(arrivalValueSchema)
   val decodeTurnstile: Column => Column = AvroFunctions.decodeExpr(turnstileValueSchema)
@@ -147,44 +146,6 @@ object AvroCodec {
           str(r, "direction"), str(r, "line"), str(r, "train_status"),
           Option(r.get("prev_station_id")).map(_.asInstanceOf[Int]),
           Option(str(r, "prev_direction")))
-      }
-    }
-    c => f(c)
-  }
-
-  val decodeTurnstileUdf: Column => Column = {
-    val sj = turnstileValueSchema
-    val f = udf { bytes: Array[Byte] =>
-      val r = if (bytes == null) null else AvroCodec.decodeRecordOrNull(sj, bytes)
-      if (r == null) null
-      else {
-        TurnstileValue(r.get("station_id").asInstanceOf[Int],
-          str(r, "station_name"), str(r, "line"))
-      }
-    }
-    c => f(c)
-  }
-
-  val decodeWeatherUdf: Column => Column = {
-    val sj = weatherValueSchema
-    val f = udf { bytes: Array[Byte] =>
-      val r = if (bytes == null) null else AvroCodec.decodeRecordOrNull(sj, bytes)
-      if (r == null) null
-      else {
-        // enum -> symbol name (P14: Spark has no enum type)
-        WeatherValue(r.get("temperature").asInstanceOf[Float], str(r, "status"))
-      }
-    }
-    c => f(c)
-  }
-
-  val decodeEventKeyUdf: Column => Column = {
-    val sj = eventKeySchema
-    val f = udf { bytes: Array[Byte] =>
-      val r = if (bytes == null) null else AvroCodec.decodeRecordOrNull(sj, bytes)
-      if (r == null) null
-      else {
-        EventKey(r.get("timestamp").asInstanceOf[Long])
       }
     }
     c => f(c)

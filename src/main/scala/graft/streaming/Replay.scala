@@ -126,12 +126,6 @@ object Replay {
     }
   }
 
-  /** S8: synthetic rate source (the reference's simulation loop analog
-    * for load tests — `rowsPerSecond` monotonically-timestamped rows). */
-  def rateStream(spark: SparkSession, rowsPerSecond: Int): DataFrame =
-    spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond.toString).load()
-
   /** F4 topic-router as a partitioned file sink: one directory per
     * route value (batch flavor; streaming uses foreachBatch + same
     * write). The streaming-native alternative is N filtered sinks. */
