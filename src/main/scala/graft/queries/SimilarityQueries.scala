@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.dedup.Dedup
 import graft.multimodal.Multimodal
-import graft.similarity.Similarity
+import graft.similarity.{Similarity, VectorCodec}
 
 /** Embedding similarity + multimodal plumbing verification.
   *
@@ -212,7 +212,7 @@ object SimilarityQueries {
         WHERE rank <= 3 ORDER BY query_id, rank"""
 
   /** Shared by q90 (inline multi-probe IVF-SQ8) and q100 (the same
-    * ranking served from writeIvfSq8Index's stored artifacts) — one
+    * ranking served from writeIvfIndex's stored SQ8 artifacts) — one
     * definition so the grid, probe list, and integer distance can never
     * drift between the inline and served forms. */
   private val ivfSq8MultiprobeOracle: String = """
@@ -476,9 +476,9 @@ object SimilarityQueries {
     GraftQuery(
       "q97_ann_flat_from_index",
       "IVF-Flat served from a WRITTEN index (the uncompressed sibling " +
-        "of q89): writeIvfFlatIndex materializes full-precision vectors " +
+        "of q89): writeIvfIndex materializes full-precision vectors " +
         "one dir per coarse cell plus the stored centroids, then " +
-        "ivfFlatTopKFromIndex answers q51's exact ranking reading ONLY " +
+        "ivfTopKFromIndex answers q51's exact ranking reading ONLY " +
         "the probed cell dirs (static partition pruning, plan-asserted " +
         "in spec) with exact in-cell cosine. Shares q51's oracle SQL " +
         "verbatim.",
@@ -486,9 +486,9 @@ object SimilarityQueries {
         val e = Tables.table(spark, dir, "embeddings")
         val q = e.filter(col("vec_id") % 50 === 0)
         val idx = QueryScratch.dir("graft_q97_index")
-        graft.sinks.CorpusSink.writeIvfFlatIndex(
+        graft.sinks.CorpusSink.writeIvfIndex(
           e, "vec_id", "embedding", idx, nLists = 8)
-        Similarity.ivfFlatTopKFromIndex(spark, idx, q, "vec_id", "embedding",
+        Similarity.ivfTopKFromIndex(spark, idx, q, "vec_id", "embedding",
             k = 3, nProbe = 1)
           .orderBy(col("query_id"), col("rank"))
       },
@@ -929,9 +929,9 @@ object SimilarityQueries {
 
     GraftQuery(
       "q89_ann_from_index",
-      "ANN served from a WRITTEN index: writeIvfPqIndex materializes " +
+      "ANN served from a WRITTEN index: writeIvfIndex (PQ codec) materializes " +
         "codes (one dir per coarse cell) + centroids/codebook/ranges, " +
-        "then ivfPqTopKFromIndex answers q77's exact ranking from the " +
+        "then ivfTopKFromIndex answers q77's exact ranking from the " +
         "stored artifacts alone — corpus vectors never re-read, probed " +
         "cell dirs pruned statically (plan-asserted in spec). Shares " +
         "q77's oracle SQL verbatim; integer (dist, id) ranking, " +
@@ -942,10 +942,11 @@ object SimilarityQueries {
         // fixed scratch path: repeated verify/bench runs overwrite one
         // index instead of accumulating temp dirs
         val idx = QueryScratch.dir("graft_q89_index")
-        graft.sinks.CorpusSink.writeIvfPqIndex(
-          e, "vec_id", "embedding", idx, nLists = 8, m = 8, dim = 64, kCent = 16)
-        Similarity.ivfPqTopKFromIndex(spark, idx, q, "vec_id", "embedding",
-            k = 3, m = 8, dim = 64, nProbe = 1)
+        graft.sinks.CorpusSink.writeIvfIndex(
+          e, "vec_id", "embedding", idx, nLists = 8,
+          codec = VectorCodec.Pq(m = 8, kCent = 16))
+        Similarity.ivfTopKFromIndex(spark, idx, q, "vec_id", "embedding",
+            k = 3, nProbe = 1)
           .orderBy(col("query_id"), col("rank"))
       },
       Some(ivfPqOracle)),
@@ -964,12 +965,13 @@ object SimilarityQueries {
         val e = Tables.table(spark, dir, "embeddings")
         val q = e.filter(col("vec_id") % 50 === 0)
         val idx = QueryScratch.dir("graft_q98_index")
-        graft.sinks.CorpusSink.writeIvfPqIndex(
-          e, "vec_id", "embedding", idx, nLists = 8, m = 8, dim = 64, kCent = 16)
+        graft.sinks.CorpusSink.writeIvfIndex(
+          e, "vec_id", "embedding", idx, nLists = 8,
+          codec = VectorCodec.Pq(m = 8, kCent = 16))
         Similarity.recallReport(
             Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 3),
-            Similarity.ivfPqTopKFromIndex(spark, idx, q, "vec_id", "embedding",
-              k = 3, m = 8, dim = 64, nProbe = 2))
+            Similarity.ivfTopKFromIndex(spark, idx, q, "vec_id", "embedding",
+              k = 3, nProbe = 2))
           .orderBy(col("query_id"))
       },
       Some("""
@@ -1066,9 +1068,9 @@ object SimilarityQueries {
       "q100_ann_sq8_from_index",
       "IVF-SQ8 served from a WRITTEN index — the middle point of the " +
         "serving matrix (Flat q97 = exact vectors; SQ8 = 8-bit codes, " +
-        "4x smaller scan; PQ q89 = m bytes): writeIvfSq8Index stores " +
+        "4x smaller scan; PQ q89 = m bytes): writeIvfIndex (SQ8 codec) stores " +
         "each vector quantized once under the global grid, one dir per " +
-        "coarse cell; ivfSq8TopKFromIndex quantizes the QUERY under the " +
+        "coarse cell; ivfTopKFromIndex quantizes the QUERY under the " +
         "stored grid and integer-L2 ranks only the probed cell dirs " +
         "(static partition pruning, plan-asserted in spec) at nProbe=2. " +
         "Shares q90's oracle SQL verbatim — served == inline by " +
@@ -1077,10 +1079,11 @@ object SimilarityQueries {
         val e = Tables.table(spark, dir, "embeddings")
         val q = e.filter(col("vec_id") % 50 === 0)
         val idx = QueryScratch.dir("graft_q100_index")
-        graft.sinks.CorpusSink.writeIvfSq8Index(
-          e, "vec_id", "embedding", idx, nLists = 8, dim = 64)
-        Similarity.ivfSq8TopKFromIndex(spark, idx, q, "vec_id", "embedding",
-            k = 3, dim = 64, nProbe = 2)
+        graft.sinks.CorpusSink.writeIvfIndex(
+          e, "vec_id", "embedding", idx, nLists = 8,
+          codec = VectorCodec.Sq8)
+        Similarity.ivfTopKFromIndex(spark, idx, q, "vec_id", "embedding",
+            k = 3, nProbe = 2)
           .orderBy(col("query_id"), col("rank"))
       },
       Some(ivfSq8MultiprobeOracle)),
@@ -1208,11 +1211,12 @@ object SimilarityQueries {
       (spark, dir) => {
         val e = Tables.table(spark, dir, "embeddings")
         val idx = QueryScratch.dir("graft_q106_index")
-        graft.streaming.VectorIndexStream.seedSq8Index(
-          e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx, nLists = 8)
-        graft.streaming.VectorIndexStream.appendSq8Batch(
+        graft.streaming.VectorIndexStream.seedIndex(
+          e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx, nLists = 8,
+          codec = VectorCodec.Sq8)
+        graft.streaming.VectorIndexStream.appendBatch(
           e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
-        graft.streaming.VectorIndexStream.sq8TopKFromIndex(
+        graft.streaming.VectorIndexStream.topKFromIndex(
             spark, idx, e.filter(col("vec_id") % 50 === 0),
             "vec_id", "embedding", k = 3)
           .orderBy(col("query_id"), col("rank"))
@@ -1275,12 +1279,12 @@ object SimilarityQueries {
       (spark, dir) => {
         val e = Tables.table(spark, dir, "embeddings")
         val idx = QueryScratch.dir("graft_q107_index")
-        graft.streaming.VectorIndexStream.seedPqIndex(
+        graft.streaming.VectorIndexStream.seedIndex(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
-          nLists = 8, m = 8, dim = 64, kCent = 16)
-        graft.streaming.VectorIndexStream.appendPqBatch(
+          nLists = 8, codec = VectorCodec.Pq(m = 8, kCent = 16))
+        graft.streaming.VectorIndexStream.appendBatch(
           e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
-        graft.streaming.VectorIndexStream.pqTopKFromIndex(
+        graft.streaming.VectorIndexStream.topKFromIndex(
             spark, idx, e.filter(col("vec_id") % 50 === 0),
             "vec_id", "embedding", k = 3)
           .orderBy(col("query_id"), col("rank"))
@@ -1496,9 +1500,9 @@ object SimilarityQueries {
         val q = e.filter(col("vec_id") % 50 === 0)
         val idx = QueryScratch.dir("graft_q115_index")
         graft.sinks.CorpusSink.writePqRefineIndex(
-          e, "vec_id", "embedding", idx, m = 8, dim = 64, kCent = 16)
+          e, "vec_id", "embedding", idx, m = 8, kCent = 16)
         Similarity.pqRefinedTopKFromIndex(spark, idx, q, "vec_id", "embedding",
-            k = 3, rerankR = 10, m = 8, dim = 64)
+            k = 3, rerankR = 10)
           .orderBy(col("query_id"), col("rank"))
       },
       Some(pqRefineOracle)),
@@ -1525,10 +1529,10 @@ object SimilarityQueries {
         val odd = e.filter(col("vec_id") % 2 === 1)
         val pqIdx = QueryScratch.dir("graft_q123_pq_index")
         val vecsIdx = QueryScratch.dir("graft_q123_vecs_index")
-        graft.streaming.VectorIndexStream.seedPqIndex(
-          even, "vec_id", "embedding", pqIdx, nLists = 8, m = 8,
-          dim = 64, kCent = 16)
-        graft.streaming.VectorIndexStream.appendPqBatch(
+        graft.streaming.VectorIndexStream.seedIndex(
+          even, "vec_id", "embedding", pqIdx, nLists = 8,
+          codec = VectorCodec.Pq(m = 8, kCent = 16))
+        graft.streaming.VectorIndexStream.appendBatch(
           odd, "vec_id", "embedding", pqIdx, 0L)
         graft.streaming.VectorIndexStream.seedIndex(
           even, "vec_id", "embedding", vecsIdx, nLists = 8)
@@ -1928,7 +1932,7 @@ object SimilarityQueries {
         VectorIndexStream.deleteBatch(spark, idx,
           e.filter(col("vec_id") % 10 === 3).select(col("vec_id")),
           "vec_id", batchId = 0L)
-        Similarity.ivfFlatTopKFromIndex(spark, idx, q, "vec_id", "embedding",
+        Similarity.ivfTopKFromIndex(spark, idx, q, "vec_id", "embedding",
             k = 3, nProbe = 1,
             excludeIds = Some(
               VectorIndexStream.deadIds(spark, idx, "vec_id")))
@@ -2236,7 +2240,7 @@ object SimilarityQueries {
           e.filter(col("vec_id") % 10 === 3).select(col("vec_id")),
           "vec_id", batchId = 0L)
         VectorIndexStream.purgeTombstones(spark, idx, "vec_id")
-        Similarity.ivfFlatTopKFromIndex(spark, idx, q, "vec_id", "embedding",
+        Similarity.ivfTopKFromIndex(spark, idx, q, "vec_id", "embedding",
             k = 3, nProbe = 1)
           .orderBy(col("query_id"), col("rank"))
       },
@@ -2350,15 +2354,15 @@ object SimilarityQueries {
         import graft.streaming.VectorIndexStream
         val e = Tables.table(spark, dir, "embeddings")
         val idx = QueryScratch.dir("graft_q272_index")
-        VectorIndexStream.seedSq8Index(
+        VectorIndexStream.seedIndex(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
-          nLists = 8)
-        VectorIndexStream.appendSq8Batch(
+          nLists = 8, codec = VectorCodec.Sq8)
+        VectorIndexStream.appendBatch(
           e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
         VectorIndexStream.deleteBatch(spark, idx,
           e.filter(col("vec_id") % 10 === 3).select(col("vec_id")),
           "vec_id", batchId = 1L)
-        VectorIndexStream.sq8FilteredTopKFromIndex(spark, idx,
+        VectorIndexStream.filteredTopKFromIndex(spark, idx,
             e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
             allowedIds = e.filter(col("label").isin(2, 4, 6))
               .select(col("vec_id")),
@@ -2435,12 +2439,12 @@ object SimilarityQueries {
         import graft.streaming.VectorIndexStream
         val e = Tables.table(spark, dir, "embeddings")
         val idx = QueryScratch.dir("graft_q273_index")
-        VectorIndexStream.seedPqIndex(
+        VectorIndexStream.seedIndex(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
-          nLists = 8, m = 8, dim = 64, kCent = 16)
-        VectorIndexStream.appendPqBatch(
+          nLists = 8, codec = VectorCodec.Pq(m = 8, kCent = 16))
+        VectorIndexStream.appendBatch(
           e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
-        VectorIndexStream.pqFilteredTopKFromIndex(spark, idx,
+        VectorIndexStream.filteredTopKFromIndex(spark, idx,
             e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
             allowedIds = e.filter(col("label") === 4).select(col("vec_id")),
             k = 3, minCandidates = 20L)
@@ -2589,11 +2593,11 @@ object SimilarityQueries {
         val fs = pth.getFileSystem(spark.sessionState.newHadoopConf())
         if (fs.exists(pth)) fs.delete(pth, true)
         val odds = e.filter(col("vec_id") % 2 === 1)
-        VectorIndexStream.seedSq8Index(
+        VectorIndexStream.seedIndex(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
-          nLists = 8)
-        VectorIndexStream.appendSq8Batch(odds, "vec_id", "embedding", idx, 0L)
-        VectorIndexStream.appendSq8Batch(
+          nLists = 8, codec = VectorCodec.Sq8)
+        VectorIndexStream.appendBatch(odds, "vec_id", "embedding", idx, 0L)
+        VectorIndexStream.appendBatch(
           odds.withColumn("embedding",
             transform(col("embedding"), x => x + x)),
           "vec_id", "embedding", idx, 1L)
@@ -2854,7 +2858,7 @@ object SimilarityQueries {
         "acts): the drifted SQ8 store — grid pinned on the even half, " +
         "batch 0 appends the odd half DOUBLED (q277's escape fixture, " +
         "boundary share ~20-90x the seed's) plus a takedown batch — " +
-        "is rebuilt via rebuildSq8Index, which re-ingests the live " +
+        "is rebuilt via rebuildIndex from the source, which re-ingests the live " +
         "ids' FULL-PRECISION vectors from the SOURCE corpus (codes " +
         "cannot retrain their own grid; decode-re-encode would bake " +
         "the old grid's error in) and retrains centroids AND ranges " +
@@ -2877,10 +2881,10 @@ object SimilarityQueries {
         }
         val doubled = e.filter(col("vec_id") % 2 === 1)
           .withColumn("embedding", transform(col("embedding"), x => x + x))
-        VectorIndexStream.seedSq8Index(
+        VectorIndexStream.seedIndex(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
-          nLists = 8)
-        VectorIndexStream.appendSq8Batch(doubled, "vec_id", "embedding", idx, 0L)
+          nLists = 8, codec = VectorCodec.Sq8)
+        VectorIndexStream.appendBatch(doubled, "vec_id", "embedding", idx, 0L)
         VectorIndexStream.deleteBatch(spark, idx,
           e.filter(col("vec_id") % 10 === 5).select(col("vec_id")),
           "vec_id", batchId = 1L)
@@ -2890,10 +2894,11 @@ object SimilarityQueries {
         val source = e.filter(col("vec_id") % 2 === 0)
           .select(col("vec_id"), col("embedding"))
           .unionByName(doubled.select(col("vec_id"), col("embedding")))
-        VectorIndexStream.rebuildSq8Index(
-          spark, idx, idx2, source, "vec_id", "embedding", nLists = 8)
+        VectorIndexStream.rebuildIndex(
+          spark, idx, idx2, "vec_id", "embedding", nLists = 8,
+          sourceCorpus = Some(source))
         // the drifted distribution re-encoded under the retrained grid
-        VectorIndexStream.appendSq8Batch(
+        VectorIndexStream.appendBatch(
           source.filter(col("vec_id") % 10 =!= 5),
           "vec_id", "embedding", idx2, 0L)
         VectorIndexStream.sq8BoundaryReport(spark, idx2)
@@ -2942,9 +2947,9 @@ object SimilarityQueries {
       "q281_alias_served_sq8_rebuild",
       "The rebuild->cutover->serve flow END TO END through the alias " +
         "(q280's rebuild + q279's pointer, served by " +
-        "sq8TopKFromAlias): the drifted SQ8 store (even-half grid, " +
+        "topKFromAlias): the drifted SQ8 store (even-half grid, " +
         "doubled odd batch, %10=5 takedowns) publishes as pointer v1, " +
-        "rebuildSq8Index re-ingests the source corpus into a fresh " +
+        "rebuildIndex re-ingests the source corpus into a fresh " +
         "store that publishes as v2, and BOTH generations serve " +
         "through the alias — the pinned v1 read still ranks the old " +
         "grid's saturated codes (takedowns un-excluded: plain serve), " +
@@ -2969,10 +2974,10 @@ object SimilarityQueries {
         }
         val doubled = e.filter(col("vec_id") % 2 === 1)
           .withColumn("embedding", transform(col("embedding"), x => x + x))
-        VectorIndexStream.seedSq8Index(
+        VectorIndexStream.seedIndex(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
-          nLists = 8)
-        VectorIndexStream.appendSq8Batch(doubled, "vec_id", "embedding", idx, 0L)
+          nLists = 8, codec = VectorCodec.Sq8)
+        VectorIndexStream.appendBatch(doubled, "vec_id", "embedding", idx, 0L)
         VectorIndexStream.deleteBatch(spark, idx,
           e.filter(col("vec_id") % 10 === 5).select(col("vec_id")),
           "vec_id", batchId = 1L)
@@ -2980,11 +2985,12 @@ object SimilarityQueries {
         val source = e.filter(col("vec_id") % 2 === 0)
           .select(col("vec_id"), col("embedding"))
           .unionByName(doubled.select(col("vec_id"), col("embedding")))
-        VectorIndexStream.rebuildSq8Index(
-          spark, idx, idx2, source, "vec_id", "embedding", nLists = 8)
+        VectorIndexStream.rebuildIndex(
+          spark, idx, idx2, "vec_id", "embedding", nLists = 8,
+          sourceCorpus = Some(source))
         StorePointer.publish(spark, alias, idx2)
         def serve(ver: Option[Long], tag: Long) =
-          VectorIndexStream.sq8TopKFromAlias(
+          VectorIndexStream.topKFromAlias(
               spark, alias, q, "vec_id", "embedding", k = 3, version = ver)
             .withColumn("ptr_version", lit(tag))
         serve(Some(1L), 1L).unionByName(serve(None, 2L))
@@ -3102,10 +3108,10 @@ object SimilarityQueries {
         "covers the full compression matrix: the drifted PQ store " +
         "(grid + codebook + centroids all pinned on the even half, " +
         "doubled odd batch saturating the grid, %10=5 takedowns) " +
-        "publishes as pointer v1; rebuildPqIndex re-ingests the " +
+        "publishes as pointer v1; rebuildIndex re-ingests the " +
         "source corpus, retrains ALL THREE artifacts on the live " +
         "corpus, and publishes as v2; both generations serve through " +
-        "pqTopKFromAlias — m=8 code bytes per candidate either way, " +
+        "topKFromAlias — m=8 code bytes per candidate either way, " +
         "but v2's codebook spans the distribution the store actually " +
         "holds. Integer ADC distances and integer code argmins (ties " +
         "to the lower codebook index) — hash-exact; cell-assignment " +
@@ -3127,10 +3133,10 @@ object SimilarityQueries {
         }
         val doubled = e.filter(col("vec_id") % 2 === 1)
           .withColumn("embedding", transform(col("embedding"), x => x + x))
-        VectorIndexStream.seedPqIndex(
+        VectorIndexStream.seedIndex(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
-          nLists = 8, m = 8, dim = 64, kCent = 16)
-        VectorIndexStream.appendPqBatch(doubled, "vec_id", "embedding", idx, 0L)
+          nLists = 8, codec = VectorCodec.Pq(m = 8, kCent = 16))
+        VectorIndexStream.appendBatch(doubled, "vec_id", "embedding", idx, 0L)
         VectorIndexStream.deleteBatch(spark, idx,
           e.filter(col("vec_id") % 10 === 5).select(col("vec_id")),
           "vec_id", batchId = 1L)
@@ -3138,12 +3144,12 @@ object SimilarityQueries {
         val source = e.filter(col("vec_id") % 2 === 0)
           .select(col("vec_id"), col("embedding"))
           .unionByName(doubled.select(col("vec_id"), col("embedding")))
-        VectorIndexStream.rebuildPqIndex(
-          spark, idx, idx2, source, "vec_id", "embedding",
-          nLists = 8, m = 8, dim = 64, kCent = 16)
+        VectorIndexStream.rebuildIndex(
+          spark, idx, idx2, "vec_id", "embedding", nLists = 8,
+          sourceCorpus = Some(source))
         StorePointer.publish(spark, alias, idx2)
         def serve(ver: Option[Long], tag: Long) =
-          VectorIndexStream.pqTopKFromAlias(
+          VectorIndexStream.topKFromAlias(
               spark, alias, q, "vec_id", "embedding", k = 3, version = ver)
             .withColumn("ptr_version", lit(tag))
         serve(Some(1L), 1L).unionByName(serve(None, 2L))
@@ -3390,11 +3396,11 @@ object SimilarityQueries {
         val fs = pth.getFileSystem(spark.sessionState.newHadoopConf())
         if (fs.exists(pth)) fs.delete(pth, true)
         val odds = e.filter(col("vec_id") % 2 === 1)
-        VectorIndexStream.seedPqIndex(
+        VectorIndexStream.seedIndex(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
-          nLists = 8, m = 8, dim = 64, kCent = 16)
-        VectorIndexStream.appendPqBatch(odds, "vec_id", "embedding", idx, 0L)
-        VectorIndexStream.appendPqBatch(
+          nLists = 8, codec = VectorCodec.Pq(m = 8, kCent = 16))
+        VectorIndexStream.appendBatch(odds, "vec_id", "embedding", idx, 0L)
+        VectorIndexStream.appendBatch(
           odds.withColumn("embedding",
             transform(col("embedding"), _ => lit(0.0f))),
           "vec_id", "embedding", idx, 1L)

@@ -879,206 +879,44 @@ object Similarity {
       codes: Column, lutFlat: Column, m: Int, kCent: Int): Column =
     graft.functions.PqAdcDistance.pqAdcDistance(codes, lutFlat, kCent)
 
-  /** Top-k from a WRITTEN IVF-Flat index
-    * ([[graft.sinks.CorpusSink.writeIvfFlatIndex]]'s layout): query
-    * cells are assigned against the stored centroids, the probe cell
-    * set is collected driver-side (|Q| x nProbe longs) and applied as
-    * a literal IN, so only the probed `cells/cell=N` directories are
-    * read (static partition pruning), and exact cosine re-ranks inside
-    * them. Identical output to [[ivfDeterministicTopK]] (nProbe=1) /
-    * [[ivfMultiProbeTopK]] with the same parameters: stored vectors
-    * are exact floats and the assignment recomputes the same argmin
-    * over the same stored centroids. */
-  /** `excludeIds`: optional single-column frame of ids to EXCLUDE
+  /** Top-k from a WRITTEN IVF index
+    * ([[graft.sinks.CorpusSink.writeIvfIndex]]'s layout for any codec,
+    * or a streamed store read as one unfenced history) through the one
+    * IVF probe ([[VectorCodec.topK]]). The codec comes from the index's
+    * `meta` header, and the pinned artifacts parameterize the query
+    * side exactly as the inline operators compute them: queries assign
+    * against the stored centroids, the probe cell set is collected
+    * driver-side (|Q| x nProbe longs) into a literal IN, so only the
+    * probed cell directories are read (static partition pruning), and
+    * the codec ranks in-cell — exact cosine over stored floats (Flat,
+    * identical to [[ivfDeterministicTopK]]/[[ivfMultiProbeTopK]]),
+    * integer L2 against stored SQ8 codes (identical to
+    * [[ivfSq8TopK]]), or the ADC distance over stored m-byte codes
+    * (identical to [[ivfPqTopK]]); the corpus vectors of the quantized
+    * indexes are never read. A query vector of another width than the
+    * index's fails loudly instead of ranking on a truncated prefix.
+    *
+    * `excludeIds`: optional single-column frame of ids to EXCLUDE
     * from the candidates before ranking — the tombstone subtraction
     * path ([[graft.streaming.VectorIndexStream.deadIds]], which
     * resolves re-appends latest-batch-wins;
     * [[graft.streaming.VectorIndexStream.liveTombstones]] is the raw
     * terminal set): a deleted top hit is replaced by the next-best
     * live vector, the top-k never silently shortens. The set is
-    * broadcast (tombstones stay small by contract: compaction folds
-    * history, retention drops expired delete batches) and the
-    * anti-join rides the already-pruned cell scan. */
-  def ivfFlatTopKFromIndex(
+    * broadcast and the anti-join rides the already-pruned cell scan. */
+  def ivfTopKFromIndex(
       spark: SparkSession, indexPath: String, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int = 1,
       excludeIds: Option[DataFrame] = None): DataFrame = {
-    // validate-only meta open: migrated() so shimmed generations open.
-    // Meta + centroids come through the signature-keyed ArtifactCache —
-    // warm probes pay FS listings, not Spark jobs, for pinned artifacts.
-    graft.streaming.StoreLayout.migrated(
-      graft.streaming.ArtifactCache.localFrame(spark, s"$indexPath/meta"),
-      s"IVF-Flat index at $indexPath")
-    val cent =
-      graft.streaming.ArtifactCache.localFrame(spark, s"$indexPath/centroids")
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val qc =
-      if (nProbe <= 1) assignWith(cent, q, "query_id", "q_vec")
-      else probeCells(cent, q, "query_id", "q_vec", nProbe)
-    val probedCells = qc.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val cellFilter =
-      if (probedCells.isEmpty) lit(false)
-      else expr(s"cell IN (${probedCells.mkString(",")})")
-    val ccAll = spark.read.parquet(s"$indexPath/cells")
-      .filter(cellFilter)
-      .select(col(idCol).as("neighbor_id"), col("cell").cast("long").as("cell"),
-        col(vecCol).as("c_vec"))
-    val cc = excludeIds.fold(ccAll) { t =>
-      val ex = t.select(col(t.columns.head).as("neighbor_id")).distinct()
-      ccAll.join(broadcast(ex), Seq("neighbor_id"), "left_anti")
-    }
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    cc.join(broadcast(qc.select(col("query_id"), col("q_vec"), col("cell"))),
-        Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", VectorFunctions.cosineSim(col("q_vec"), col("c_vec")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"))
-  }
-
-  /** Top-k from a WRITTEN IVF-SQ8 index
-    * ([[graft.sinks.CorpusSink.writeIvfSq8Index]]'s layout): the query
-    * is quantized under the STORED per-dimension grid and integer-L2
-    * scored ([[graft.functions.IntArrayL2]]) against the stored codes
-    * of ONLY its probed cell directories — the probe cell set collects
-    * driver-side (|Q| x nProbe longs) into a literal IN for static
-    * partition pruning, exactly like the Flat and PQ siblings. The
-    * corpus vectors are never read; the scan is 4x smaller than Flat.
-    *
-    * Identical ranking to the inline [[ivfSq8TopK]] with the same
-    * parameters by construction: the fused [[graft.functions.Sq8L2Distance]]
-    * kernel quantizes both sides under the same grid the stored codes
-    * and this probe use, and in-cell ranking is integer (dist, id).
-    * `dim` validates against the `meta` header — probing an index
-    * quantized at another width fails loudly, never silently. */
-  def ivfSq8TopKFromIndex(
-      spark: SparkSession, indexPath: String, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      dim: Int = 64, nProbe: Int = 1): DataFrame = {
-    val meta = graft.streaming.StoreLayout.cachedMetaRow(
-      spark, s"$indexPath/meta", s"IVF-SQ8 index at $indexPath")
-    val storedDim = meta.getAs[Long]("dim")
-    require(storedDim == dim,
-      s"index at $indexPath was written with dim=$storedDim, probe " +
-        s"requested dim=$dim — quantization width must match")
-    val cent =
-      graft.streaming.ArtifactCache.localFrame(spark, s"$indexPath/centroids")
-    val rangeRows = graft.streaming.ArtifactCache
-      .localFrame(spark, s"$indexPath/ranges")
-      .collect().sortBy(_.getLong(0))
-    val mns = rangeRows.map(_.getDouble(1)).toSeq
-    val mxs = rangeRows.map(_.getDouble(2)).toSeq
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val qc =
-      (if (nProbe <= 1) assignWith(cent, q, "query_id", "q_vec")
-       else probeCells(cent, q, "query_id", "q_vec", nProbe))
-        .select(col("query_id"), col("cell"),
-          graft.functions.Sq8Quantize.sq8Quantize(
-            col("q_vec").cast("array<float>"), mns, mxs).as("q_qv"))
-    val probedCells = qc.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val cellFilter =
-      if (probedCells.isEmpty) lit(false)
-      else expr(s"cell IN (${probedCells.mkString(",")})")
-    val cc = spark.read.parquet(s"$indexPath/cells")
-      .filter(cellFilter)
-      .select(col(idCol).as("neighbor_id"),
-        col("cell").cast("long").as("cell"), col("qv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist"), col("neighbor_id"))
-    cc.join(broadcast(qc), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("dist",
-        graft.functions.IntArrayL2.intArrayL2(col("q_qv"), col("qv")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("dist"))
-  }
-
-  /** Top-k from a WRITTEN IVF-PQ index
-    * ([[graft.sinks.CorpusSink.writeIvfPqIndex]]'s layout) — the
-    * serving path the inline operators' docstrings promise: corpus
-    * vectors are NEVER read; the probe touches
-    *
-    *  - `centroids` / `ranges` / `codebook`: tiny global artifacts
-    *    (nLists, dim, m x kCent rows) that parameterize the query-side
-    *    work exactly as the inline [[ivfPqTopK]] computes them;
-    *  - `codes/cell=N`: ONLY the query batch's probed cell directories
-    *    — the probe cell set is collected driver-side (|Q| x nProbe
-    *    longs, a per-query-batch artifact like the ADC LUT itself) and
-    *    applied as a literal IN filter, so the pruning is static
-    *    partition pruning visible in the plan's PartitionFilters, and
-    *    the scan reads m bytes per candidate.
-    *
-    * Identical output to [[ivfPqTopK]] with the same parameters by
-    * construction: stored codes/codebook/ranges are exact integers and
-    * float64 stats, and the query-side cell assignment recomputes the
-    * same argmin over the same stored centroids. `m`/`dim` are
-    * validated against the index's `meta` header — probing with the
-    * wrong quantization parameters would silently produce garbage
-    * distances, so it fails loudly instead. */
-  def ivfPqTopKFromIndex(
-      spark: SparkSession, indexPath: String, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      m: Int = 8, dim: Int = 64, nProbe: Int = 1): DataFrame = {
-    val meta = graft.streaming.StoreLayout.cachedMetaRow(
-      spark, s"$indexPath/meta", s"IVF-PQ index at $indexPath")
-    val (storedM, storedDim) =
-      (meta.getAs[Long]("m"), meta.getAs[Long]("dim"))
-    require(storedM == m && storedDim == dim,
-      s"index at $indexPath was written with m=$storedM dim=$storedDim, " +
-        s"probe requested m=$m dim=$dim — quantization parameters must match")
-    val cent =
-      graft.streaming.ArtifactCache.localFrame(spark, s"$indexPath/centroids")
-    val rangeRows = graft.streaming.ArtifactCache
-      .localFrame(spark, s"$indexPath/ranges")
-      .collect().sortBy(_.getLong(0))
-    val mns = rangeRows.map(_.getDouble(1)).toSeq
-    val mxs = rangeRows.map(_.getDouble(2)).toSeq
-    val codebook =
-      graft.streaming.ArtifactCache.localFrame(spark, s"$indexPath/codebook")
-
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val cb = collectedCodebook(codebook, m)
-    val kCent = cb(0).length
-    // flattened per-query LUT computed on the probe frame itself
-    // ([[pqLutFlatColumn]]): the ADC sum becomes one expression per
-    // candidate row, so the m-way posexplode of the stored codes and
-    // the (query, neighbor) re-aggregation exchange disappear — the
-    // probed cell directories are scanned once, m bytes per candidate,
-    // straight into the rank window
-    val qc =
-      (if (nProbe <= 1) assignWith(cent, q, "query_id", "q_vec")
-       else probeCells(cent, q, "query_id", "q_vec", nProbe))
-        .select(col("query_id"), col("cell").as("q_cell"),
-          pqLutFlatColumn(graft.functions.Sq8Quantize.sq8Quantize(
-            col("q_vec").cast("array<float>"), mns, mxs), cb, dim)
-            .as("dflat"))
-    val probedCells = qc.select(col("q_cell")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    // literal IN over the hive partition column (typed by directory
-    // inference) -> static PartitionFilters; unprobed cell dirs are
-    // never opened. An empty query batch probes nothing.
-    val cellFilter =
-      if (probedCells.isEmpty) lit(false)
-      else expr(s"cell IN (${probedCells.mkString(",")})")
-    val codes = spark.read.parquet(s"$indexPath/codes")
-      .filter(cellFilter)
-      .select(col(idCol).as("neighbor_id"), col("cell").cast("long").as("cell"),
-        col("codes"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist"), col("neighbor_id"))
-    codes
-      .join(broadcast(qc), col("cell") === col("q_cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("dist",
-        adcDistColumn(col("codes"), col("dflat"), m, kCent))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("dist"))
+    val pinned = VectorCodec.load(spark, indexPath, s"IVF index at $indexPath")
+    val cells = VectorCodec.writtenCellsDir(pinned.codec)
+    VectorCodec.topK(pinned, indexPath, queries, idCol, vecCol, k, nProbe, None,
+      cellFilter => VectorCodec.excluding(
+        spark.read.parquet(s"$indexPath/$cells").filter(cellFilter)
+          .select(col(idCol).as("neighbor_id"),
+            col("cell").cast("long").as("cell"),
+            col(pinned.storedCol(vecCol)).as("c_pay")),
+        "neighbor_id", excludeIds))
   }
 
   /** Two-stage top-k from a WRITTEN PQ+refine index
@@ -1094,19 +932,24 @@ object Similarity {
     * as PushedFilters in the plan; spec-asserted). The corpus itself is
     * never re-read. Identical output to [[pqTopKRefined]] with the
     * same parameters by construction: stored codes/codebook/ranges are
-    * exact integers and float64 stats, stored vecs are exact floats. */
+    * exact integers and float64 stats, stored vecs are exact floats;
+    * the quantization parameters (m, dim, kCent) are read off the
+    * stored ranges and codebook. */
   def pqRefinedTopKFromIndex(
       spark: SparkSession, indexPath: String, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, rerankR: Int,
-      m: Int = 8, dim: Int = 64): DataFrame = {
+      idCol: String, vecCol: String, k: Int, rerankR: Int): DataFrame = {
     require(rerankR >= k, s"rerankR=$rerankR must be >= k=$k")
     val rangeRows = graft.streaming.ArtifactCache
       .localFrame(spark, s"$indexPath/ranges")
       .collect().sortBy(_.getLong(0))
     val mns = rangeRows.map(_.getDouble(1)).toSeq
     val mxs = rangeRows.map(_.getDouble(2)).toSeq
+    val dim = mns.length
     val codebook =
       graft.streaming.ArtifactCache.localFrame(spark, s"$indexPath/codebook")
+    // m and kCent are the stored codebook's own shape (counted on the
+    // driver: the codebook frame is local, a distinct() would plan a job)
+    val m = codebook.collect().map(_.getAs[Long]("s")).distinct.length
     val cb = collectedCodebook(codebook, m)
     val kCent = cb(0).length
     // stored code arrays ranked directly against the flattened

@@ -3,6 +3,8 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
+import graft.similarity.VectorCodec
+
 /** Write-time layout for corpus tables (the sink half of the 100 TB
   * story): how survivors of the cleaning/curation passes should land
   * on storage so DOWNSTREAM reads prune instead of scan.
@@ -19,7 +21,8 @@ import org.apache.spark.sql.functions._
   *  - `writeIvfCells`: the ANN-serving layout — embeddings partitioned
   *    by their IVF cell id, so a probe touching nProbe cells reads
   *    exactly those directories (the write-time partition key the
-  *    [[graft.similarity.Similarity.ivfTopK]] plan calls for).
+  *    [[graft.similarity.Similarity.ivfTopK]] plan calls for);
+  *    `writeIvfIndex` adds the pinned quantizer and a payload codec.
   *
   * All three are thin, deliberately: the point is the layout contract,
   * captured in specs that assert the directory/file structure a reader
@@ -114,14 +117,16 @@ object CorpusSink {
     * A query-time probe broadcasts its ADC lookup table built from
     * codebook + ranges and scans ONLY `codes` — the scan the 32x
     * compression exists for. Codebook and ranges are tiny global
-    * artifacts written single-file for cheap driver loads. */
+    * artifacts written single-file for cheap driver loads. The vector
+    * width is the corpus's (the ranges' length). */
   def writePqIndex(
       corpus: DataFrame, idCol: String, vecCol: String, path: String,
-      m: Int = 8, dim: Int = 64, kCent: Int = 16): Unit = {
+      m: Int = 8, kCent: Int = 16): Unit = {
     import graft.similarity.Similarity
     val (mns, mxs) = Similarity.sq8Ranges(corpus, vecCol)
-    val codebook = Similarity.pqCodebook(corpus, idCol, vecCol, m, dim, kCent, mns, mxs)
-    packedCodes(corpus, idCol, vecCol, codebook, m, dim, mns, mxs)
+    val codebook = Similarity.pqCodebook(
+      corpus, idCol, vecCol, m, mns.length, kCent, mns, mxs)
+    packedCodes(corpus, idCol, vecCol, codebook, m, mns, mxs)
       .write.mode(SaveMode.Overwrite).parquet(s"$path/codes")
     writePqArtifacts(corpus, path, codebook, mns, mxs)
   }
@@ -137,163 +142,49 @@ object CorpusSink {
     * [[graft.similarity.Similarity.pqRefinedTopKFromIndex]] probes it. */
   def writePqRefineIndex(
       corpus: DataFrame, idCol: String, vecCol: String, path: String,
-      m: Int = 8, dim: Int = 64, kCent: Int = 16): Unit = {
-    writePqIndex(corpus, idCol, vecCol, path, m, dim, kCent)
+      m: Int = 8, kCent: Int = 16): Unit = {
+    writePqIndex(corpus, idCol, vecCol, path, m, kCent)
     corpus.select(col(idCol), col(vecCol))
       .repartitionByRange(col(idCol))
       .sortWithinPartitions(col(idCol))
       .write.mode(SaveMode.Overwrite).parquet(s"$path/vecs")
   }
 
-  /** IVF-PQ serving layout — [[writePqIndex]] composed with the IVF
-    * cell partitioner, the materialized form of
-    * [[graft.similarity.Similarity.ivfPqTopK]]:
+  /** IVF serving layout — the coarse quantizer plus one DIRECTORY per
+    * cell, so a probe reads exactly its nProbe cell directories
+    * (partition pruning instead of a corpus scan), with the payload the
+    * `codec` ([[VectorCodec]]) stores per vector:
     *
-    *   `path/codes/cell=N` — per-vector PQ codes, one DIRECTORY per
-    *                         coarse cell, so a probe reads exactly its
-    *                         nProbe cell dirs (partition pruning) and
-    *                         only m code bytes per candidate;
-    *   `path/centroids`    — (cent_id, cent_vec), the coarse quantizer;
-    *   `path/codebook` / `path/ranges` — as [[writePqIndex]].
-    *
-    * [[graft.similarity.Similarity.ivfPqTopKFromIndex]] answers top-k
-    * from this layout alone — the corpus vectors are never read again. */
-  def writeIvfPqIndex(
-      corpus: DataFrame, idCol: String, vecCol: String, path: String,
-      nLists: Int = 8, m: Int = 8, dim: Int = 64, kCent: Int = 16): Unit = {
-    import graft.similarity.Similarity
-    val spark = corpus.sparkSession
-    // ONE md5-ranked sample pass serves the coarse centroids AND the
-    // codebook sample (shared (md5(id), id) order — prefix equality);
-    // the write used to pay three corpus sample passes (assign's
-    // centroid pick, the centroid artifact, the codebook pick)
-    val sample = Similarity.centroidSample(
-      corpus, idCol, vecCol, math.max(nLists, kCent))
-    val cent = sample.centFrame(spark, nLists)
-    val (mns, mxs) = Similarity.sq8Ranges(corpus, vecCol)
-    val codebook = Similarity.pqCodebookFromSample(
-      spark, sample.floatVecs(kCent), m, dim, mns, mxs)
-    val cb = Similarity.collectedCodebook(codebook, m)
-    // codes ride the cell assignment's own per-id exchange as a
-    // single-pass codegen column — the separate encode pipeline and
-    // its join back on the id are gone (one corpus pass, not two)
-    Similarity.assignWith(
-        cent, corpus.select(col(idCol), col(vecCol)), idCol, vecCol)
-      .select(col(idCol),
-        Similarity.pqCodesColumn(
-          graft.functions.Sq8Quantize.sq8Quantize(col(vecCol), mns, mxs),
-          cb, dim).as("codes"),
-        col("cell"))
-      .repartition(col("cell"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cell")
-      .parquet(s"$path/codes")
-    cent.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
-    primeLocal(cent, s"$path/centroids")
-    writePqArtifacts(corpus, path, codebook, mns, mxs)
-    // index version header: the stored artifacts are meaningless under
-    // different quantization parameters, so a probe validates against
-    // this instead of trusting its caller
-    import spark.implicits._
-    val meta = graft.streaming.StoreLayout.stamp(
-      Seq((nLists.toLong, m.toLong, dim.toLong, kCent.toLong))
-        .toDF("nLists", "m", "dim", "kCent"))
-    meta.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/meta")
-    primeLocal(meta, s"$path/meta")
-  }
-
-  /** IVF-Flat serving layout — the uncompressed sibling of
-    * [[writeIvfPqIndex]]: full-precision vectors one directory per
-    * coarse cell (`path/cells/cell=N`) plus the stored coarse
-    * quantizer (`path/centroids`) and a `meta` header. A probe
-    * ([[graft.similarity.Similarity.ivfFlatTopKFromIndex]]) assigns its
-    * queries against the stored centroids and reads exactly its nProbe
-    * cell directories — partition pruning instead of a corpus scan,
-    * with exact in-cell cosine (no quantization error), the right
-    * serving point when recall matters more than scan bytes. */
-  def writeIvfFlatIndex(
-      corpus: DataFrame, idCol: String, vecCol: String, path: String,
-      nLists: Int = 8): Unit = {
-    import graft.similarity.Similarity
-    val spark = corpus.sparkSession
-    // one centroid sample pass shared by the assignment and the
-    // centroid artifact (the write used to pay it twice)
-    val sample = Similarity.centroidSample(corpus, idCol, vecCol, nLists)
-    val cent = sample.centFrame(spark, nLists)
-    Similarity.assignWith(
-        cent, corpus.select(col(idCol), col(vecCol)), idCol, vecCol)
-      .select(col(idCol), col("cell"), col(vecCol))
-      .repartition(col("cell"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cell")
-      .parquet(s"$path/cells")
-    cent.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
-    primeLocal(cent, s"$path/centroids")
-    import spark.implicits._
-    val meta = graft.streaming.StoreLayout.stamp(
-      Seq(Tuple1(nLists.toLong)).toDF("nLists"))
-    meta.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/meta")
-    primeLocal(meta, s"$path/meta")
-  }
-
-  /** IVF-SQ8 serving layout — the middle point of the serving matrix
-    * (IVF-Flat `writeIvfFlatIndex` = exact vectors, 1x; this = 8-bit
-    * codes, 4x smaller scan, no codebook approximation beyond the
-    * per-dimension grid; IVF-PQ `writeIvfPqIndex` = m code bytes, 32x):
-    *
-    *   `path/cells/cell=N` — (id, qv array<long>): each vector
-    *                         quantized ONCE at write time under the
-    *                         global per-dimension SQ8 grid, one
-    *                         directory per coarse cell;
+    *   `path/cells/cell=N` — Flat: (id, vec), exact floats — the
+    *                         serving point when recall matters more
+    *                         than scan bytes; SQ8: (id, qv), each vector
+    *                         quantized once under the global
+    *                         per-dimension grid, a 4x smaller scan;
+    *   `path/codes/cell=N` — PQ: (id, codes), m code bytes (32x);
     *   `path/centroids`    — the coarse quantizer (float, exact);
-    *   `path/ranges`       — (i, mn, mx), the grid the stored codes
-    *                         are meaningless without;
-    *   `path/meta`         — (nLists, dim) version header.
+    *   `path/ranges`       — (i, mn, mx), the SQ8 grid (SQ8 and PQ);
+    *   `path/codebook`     — the PQ codebook (PQ);
+    *   `path/meta`         — version header naming the codec: (nLists)
+    *                         Flat, (nLists, dim) SQ8, (nLists, m, dim,
+    *                         kCent) PQ, dim read off the corpus.
     *
-    * [[graft.similarity.Similarity.ivfSq8TopKFromIndex]] answers top-k
-    * from these artifacts alone: quantize the QUERY under the stored
-    * grid, integer-L2 against the stored codes of the probed cell
-    * directories — identical ranking to the inline fused-kernel
-    * [[graft.similarity.Similarity.ivfSq8TopK]] by construction (the
-    * fused kernel quantizes both sides under the same grid). */
-  def writeIvfSq8Index(
+    * The artifacts are trained exactly as a streamed store's seed
+    * ([[VectorCodec.train]]: one md5-ranked sample pass
+    * for the centroids and the codebook sample), and the payload rides
+    * the cell assignment's own per-id exchange as a single-pass column.
+    * [[graft.similarity.Similarity.ivfTopKFromIndex]] answers top-k from
+    * this layout alone — identical ranking to the inline
+    * [[graft.similarity.Similarity.ivfDeterministicTopK]] / `ivfSq8TopK`
+    * / `ivfPqTopK` by construction. */
+  def writeIvfIndex(
       corpus: DataFrame, idCol: String, vecCol: String, path: String,
-      nLists: Int = 8, dim: Int = 64): Unit = {
-    import graft.similarity.Similarity
-    val spark = corpus.sparkSession
-    // one centroid sample pass shared by the assignment and the
-    // centroid artifact (the write used to pay it twice)
-    val sample = Similarity.centroidSample(corpus, idCol, vecCol, nLists)
-    val cent = sample.centFrame(spark, nLists)
-    val (mns, mxs) = Similarity.sq8Ranges(corpus, vecCol)
-    Similarity.assignWith(
-        cent, corpus.select(col(idCol), col(vecCol)), idCol, vecCol)
-      .select(col(idCol),
-        graft.functions.Sq8Quantize.sq8Quantize(
-          col(vecCol).cast("array<float>"), mns, mxs).as("qv"),
-        col("cell"))
+      nLists: Int = 8, codec: VectorCodec = VectorCodec.Flat): Unit = {
+    val pinned = VectorCodec.train(codec, corpus, idCol, vecCol, nLists, None, path)
+    VectorCodec.encodeCells(pinned, corpus, idCol, vecCol, path)
       .repartition(col("cell"))
       .write.mode(SaveMode.Overwrite)
       .partitionBy("cell")
-      .parquet(s"$path/cells")
-    cent.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
-    primeLocal(cent, s"$path/centroids")
-    import spark.implicits._
-    val ranges = mns.indices.map(i => (i.toLong, mns(i), mxs(i)))
-      .toDF("i", "mn", "mx")
-    ranges.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/ranges")
-    primeLocal(ranges, s"$path/ranges")
-    val meta = graft.streaming.StoreLayout.stamp(
-      Seq((nLists.toLong, dim.toLong)).toDF("nLists", "dim"))
-    meta.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/meta")
-    primeLocal(meta, s"$path/meta")
+      .parquet(s"$path/${VectorCodec.writtenCellsDir(codec)}")
   }
 
   /** One row per vector with its m codes packed into an array — the
@@ -305,7 +196,7 @@ object CorpusSink {
     * re-aggregation shuffles. */
   private def packedCodes(
       corpus: DataFrame, idCol: String, vecCol: String,
-      codebook: DataFrame, m: Int, dim: Int,
+      codebook: DataFrame, m: Int,
       mns: Seq[Double], mxs: Seq[Double]): DataFrame = {
     import graft.similarity.Similarity
     val cb = Similarity.collectedCodebook(codebook, m)
@@ -313,7 +204,7 @@ object CorpusSink {
       .select(col(idCol),
         Similarity.pqCodesColumn(
           graft.functions.Sq8Quantize.sq8Quantize(col(vecCol), mns, mxs),
-          cb, dim).as("codes"))
+          cb, mns.length).as("codes"))
   }
 
   private def writePqArtifacts(

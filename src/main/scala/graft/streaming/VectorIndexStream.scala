@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 
-import graft.similarity.Similarity
+import graft.similarity.{Similarity, VectorCodec}
 
 /** Continuous ANN index maintenance — the durable-index streaming story
   * ([[IncrementalDedup]] for exact fingerprints, [[NearDedupStream]]
@@ -17,7 +17,14 @@ import graft.similarity.Similarity
   * Layout (`indexDir/`):
   *   `centroids`             — the coarse quantizer, trained ONCE at
   *                             seed time and never moved (see below);
-  *   `meta`                  — (nLists) version header;
+  *   `ranges`, `codebook`    — the SQ8 grid (SQ8 and PQ stores) and the
+  *                             PQ codebook (PQ stores), pinned the same
+  *                             way;
+  *   `meta`                  — version header that names the payload
+  *                             codec ([[VectorCodec]]): (nLists) flat,
+  *                             (nLists, dim) SQ8, (nLists, m, dim,
+  *                             kCent) PQ. Only [[seedIndex]] chooses a
+  *                             codec; every other entry reads it here;
   *   `cells/batch=-1/cell=N` — the seed corpus' cell-partitioned
   *                             vectors (batch -1 = oldest history,
   *                             the [[BatchIndex]] seed convention);
@@ -43,70 +50,56 @@ import graft.similarity.Similarity
   */
 object VectorIndexStream {
 
-  /** Seed the index: train (pick) centroids from the seed corpus,
-    * assign and write its vectors as the `batch=-1` partition. The
-    * centroids written here serve every future append and probe.
+  /** Seed the index: train the codec's artifacts on the seed corpus
+    * (the coarse centroids, plus the SQ8 grid and the PQ codebook for
+    * the quantized codecs), pin them with the meta header that names
+    * the codec, then write the corpus as the `batch=-1` partition. The
+    * pinned artifacts serve every future append and probe: stored
+    * codes are only comparable under the grid and codebook that
+    * produced them, exactly as cell ids are under the centroids.
+    * Streamed vectors outside the pinned SQ8 ranges clamp, the
+    * standard saturation behavior.
     *
-    * `centroids` swaps the quantizer: None picks the deterministic
-    * md5-sampled table ([[Similarity.ivfCentroids]], the
-    * oracle-verifiable default); pass
-    * [[Similarity.kmeansCentroids]]'s output (or any
-    * (cent_id, cent_vec) frame) to pin a TRAINED quantizer — better
-    * cell balance on clustered real-world embeddings, same serving
-    * path, since every consumer reads the quantizer from the store. */
+    * `codec` is the payload ([[VectorCodec]]): Flat (default) stores
+    * full-precision vectors, Sq8 4x smaller codes, Pq(m, kCent) m code
+    * bytes per vector. `centroids` swaps the quantizer: None picks the
+    * deterministic md5-sampled table ([[Similarity.ivfCentroids]], the
+    * oracle-verifiable default); pass [[Similarity.kmeansCentroids]]'s
+    * output (or any (cent_id, cent_vec) frame) to pin a TRAINED
+    * quantizer — same serving path, since every consumer reads the
+    * quantizer from the store. */
   def seedIndex(
       corpus: DataFrame, idCol: String, vecCol: String, indexDir: String,
-      nLists: Int = 8, centroids: Option[DataFrame] = None): Unit = {
-    val spark = corpus.sparkSession
-    val cent = centroids.getOrElse(
-      Similarity.ivfCentroids(corpus, idCol, vecCol, nLists))
-    require(Seq("cent_id", "cent_vec").forall(cent.columns.contains),
-      s"centroids frame must have (cent_id, cent_vec), got ${cent.columns.toSeq}")
-    // prune to the contract columns: an extra column riding along
-    // (worst case one named like a probe-side alias) would be
-    // persisted into the store and break every later assignWith join.
-    // Collected ONCE driver-side (the nLists x dim table is the store's
-    // own bounded artifact): the write below then persists the local
-    // rows without re-running the centroid pick's corpus scan, and the
-    // seed append reuses the same local frame instead of re-reading the
-    // file it just wrote — one corpus pass and zero artifact re-reads
-    // where the previous shape paid a scan per consumer.
-    val centLocal = localized(cent.select(col("cent_id"), col("cent_vec")))
-    centLocal.coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexDir/centroids")
-    primeLocal(centLocal, s"$indexDir/centroids")
-    import spark.implicits._
-    val meta = StoreLayout.stamp(Seq(Tuple1(nLists.toLong)).toDF("nLists"))
-    meta.coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
-    primeLocal(meta, s"$indexDir/meta")
-    writeCellsWith(centLocal, corpus, idCol, vecCol, indexDir, -1L)
-  }
+      nLists: Int = 8, centroids: Option[DataFrame] = None,
+      codec: VectorCodec = VectorCodec.Flat): Unit =
+    writeCells(
+      VectorCodec.train(codec, corpus, idCol, vecCol, nLists, centroids, indexDir),
+      corpus, idCol, vecCol, indexDir, -1L)
 
-  /** Append one batch: assign against the STORED centroids, overwrite
-    * the batch's own cell-partitioned subtree. Also the batch-backfill
-    * entry point (ingesting a static corpus as one numbered batch). */
+  /** Append one batch: assign against the STORED centroids (always on
+    * the full-precision vectors — storage compression never degrades
+    * cell placement), encode the payload under the pinned codec, and
+    * overwrite the batch's own cell-partitioned subtree. Also the
+    * batch-backfill entry point (ingesting a static corpus as one
+    * numbered batch). */
   def appendBatch(
       batch: DataFrame, idCol: String, vecCol: String, indexDir: String,
       batchId: Long): Unit = {
     require(batchId >= 0, s"batchId must be non-negative, got $batchId " +
       "(batch -1 is the seed partition)")
-    writeCells(batch, idCol, vecCol, indexDir, batchId)
+    writeCells(pinnedAt(batch.sparkSession, indexDir), batch, idCol, vecCol,
+      indexDir, batchId)
   }
 
-  private def writeCells(
-      df: DataFrame, idCol: String, vecCol: String, indexDir: String,
-      batchId: Long): Unit =
-    writeCellsWith(
-      ArtifactCache.localFrame(df.sparkSession, s"$indexDir/centroids"),
-      df, idCol, vecCol, indexDir, batchId)
+  private def pinnedAt(spark: SparkSession, indexDir: String): VectorCodec.Pinned =
+    VectorCodec.load(spark, indexDir, s"vector store at $indexDir")
 
-  private def writeCellsWith(
-      cent: DataFrame, df: DataFrame, idCol: String, vecCol: String,
+  private def writeCells(
+      pinned: VectorCodec.Pinned, df: DataFrame, idCol: String, vecCol: String,
       indexDir: String, batchId: Long): Unit = {
     MaintenanceLease.refuseIfHeld(
       df.sparkSession, indexDir, s"append batch=$batchId")
-    Similarity.assignWith(cent, df.select(col(idCol), col(vecCol)), idCol, vecCol)
-      .select(col(idCol), col(vecCol), col("cell"))
+    VectorCodec.encodeCells(pinned, df, idCol, vecCol, indexDir)
       .repartition(col("cell"))
       // id-sorted within each cell file: parquet row-group min/max on
       // the id column stay tight, so id-point reads (the refine stage's
@@ -118,10 +111,9 @@ object VectorIndexStream {
     BatchIndex.stampBatch(df.sparkSession, s"$indexDir/cells", batchId)
   }
 
-  /** The one streaming-writer shape all three payload variants share:
-    * append the batch under its own partition, then let `emit` observe
-    * it. The store must be seeded before the stream starts (the
-    * pinned artifacts the appenders read are written at seed time). */
+  /** The streaming-writer shape the vector appender and the delete
+    * feed share: write the batch under its own partition, then let
+    * `emit` observe it. */
   private def streamTo(
       vectors: DataFrame, checkpointDir: String,
       append: (DataFrame, Long) => Unit,
@@ -135,42 +127,21 @@ object VectorIndexStream {
         ()
       }
 
-  /** A pinned artifact is immutable for the store's lifetime, so the
-    * streaming writers load each once at construction and replay it as
-    * a LOCAL frame — without this, every micro-batch re-lists and
-    * re-reads the artifact parquet on the hot path. */
-  private def localized(df: DataFrame): DataFrame = {
-    val rows = df.collect()
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), df.schema)
-  }
-
-  /** Prime [[ArtifactCache]] from a frame that is already local — a
-    * LocalRelation's collect() runs no Spark job, so a seed that built
-    * an artifact driver-side records it for the store's first reader
-    * at zero cost. */
-  private def primeLocal(df: DataFrame, dir: String): Unit =
-    ArtifactCache.prime(df.sparkSession, dir, df.schema, df.collect())
-
   /** Streaming writer: every micro-batch's vectors are appended under
-    * their own batch partition. `emit` (optional) observes each batch
-    * after its index write lands. Start with `.start()`. */
+    * their own batch partition ([[appendBatch]]). The store must be
+    * seeded before the stream starts; its pinned artifacts are loaded
+    * ONCE here and replayed as local frames, so no micro-batch re-lists
+    * or re-reads them on the hot path. `emit` (optional) observes each
+    * batch after its index write lands. Start with `.start()`. */
   def indexStreamTo(
       vectors: DataFrame, idCol: String, vecCol: String,
       indexDir: String, checkpointDir: String)(
       emit: (DataFrame, Long) => Unit = (_, _) => ()): DataStreamWriter[Row] = {
-    // migrated(), not check(): this open only validates the meta (the
-    // artifacts are read from their own files), so a known older
-    // generation with a shipped shim opens here like everywhere else
-    StoreLayout.migrated(
-      ArtifactCache.localFrame(vectors.sparkSession, s"$indexDir/meta"),
-      s"vector store at $indexDir")
-    val cent = ArtifactCache.localFrame(
-      vectors.sparkSession, s"$indexDir/centroids")
+    val pinned = pinnedAt(vectors.sparkSession, indexDir)
     streamTo(vectors, checkpointDir,
       (b, i) => {
         require(i >= 0, s"batchId must be non-negative, got $i")
-        writeCellsWith(cent, b, idCol, vecCol, indexDir, i)
+        writeCells(pinned, b, idCol, vecCol, indexDir, i)
       }, emit)
   }
 
@@ -352,7 +323,7 @@ object VectorIndexStream {
     * does not. Serving subtracts [[deadIds]] (re-appends resolved
     * latest-batch-wins; [[liveTombstones]] is the raw terminal set)
     * BEFORE ranking via the `excludeIds` hook on
-    * [[graft.similarity.Similarity.ivfFlatTopKFromIndex]], so a
+    * [[filteredTopKFromIndex]] and [[Similarity.ivfTopKFromIndex]], so a
     * deleted top hit is replaced by the next-best live vector, never
     * silently shortening the top-k. Physical removal rides the
     * existing maintenance ops: compaction folds history and retention
@@ -655,390 +626,10 @@ object VectorIndexStream {
       checkpointDir: String): Seq[Long] =
     BatchIndex.quarantineOrphans(spark, s"$indexDir/cells", checkpointDir)
 
-  /** Seed the QUANTIZED (SQ8) variant of the store: centroids AND the
-    * per-dimension quantization ranges are trained on the seed corpus
-    * and pinned — the same argument as the centroids (stored codes are
-    * only comparable under the grid that produced them; a drifting
-    * grid would corrupt every earlier partition). Streamed vectors
-    * outside the pinned ranges clamp, the standard SQ8 saturation
-    * behavior. Cells hold (id, qv) at 4x smaller scan than the flat
-    * store. */
-  def seedSq8Index(
-      corpus: DataFrame, idCol: String, vecCol: String, indexDir: String,
-      nLists: Int = 8): Unit = {
-    val spark = corpus.sparkSession
-    val (cent, mns, mxs) =
-      writeCentroidsAndRanges(corpus, idCol, vecCol, indexDir, nLists)
-    import spark.implicits._
-    val meta = StoreLayout.stamp(
-      Seq((nLists.toLong, mns.length.toLong)).toDF("nLists", "dim"))
-    meta.coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexDir/meta")
-    primeLocal(meta, s"$indexDir/meta")
-    // the artifacts just written ARE the store's pinned artifacts —
-    // hand them to the seed append directly instead of re-reading the
-    // three files back (meta + ranges + centroids: three loads saved
-    // per seed; later appends still load from disk, the durability
-    // contract)
-    appendSq8(Sq8Artifacts(cent, mns, mxs), corpus, idCol, vecCol,
-      indexDir, -1L)
-  }
-
-  /** Append one batch to the SQ8 store: assignment runs on the FULL-
-    * PRECISION vectors against the pinned float centroids (storage
-    * compression never degrades cell placement); only the stored
-    * payload is quantized, under the pinned ranges. */
-  def appendSq8Batch(
-      batch: DataFrame, idCol: String, vecCol: String, indexDir: String,
-      batchId: Long): Unit = {
-    require(batchId >= 0, s"batchId must be non-negative, got $batchId " +
-      "(batch -1 is the seed partition)")
-    appendSq8(loadSq8Artifacts(batch.sparkSession, indexDir), batch,
-      idCol, vecCol, indexDir, batchId)
-  }
-
-  private final case class Sq8Artifacts(
-      cent: DataFrame, mns: Seq[Double], mxs: Seq[Double])
-
-  private def loadSq8Artifacts(
-      spark: SparkSession, indexDir: String): Sq8Artifacts = {
-    // validate-only open (ranges/centroids live in their own files):
-    // migrated() so shimmed generations open like checkedMetaRow's.
-    // All three artifacts come through the signature-keyed
-    // [[ArtifactCache]] — a probe/append no longer pays 3 Spark jobs
-    // re-loading pinned frames this JVM already read.
-    StoreLayout.migrated(ArtifactCache.localFrame(spark, s"$indexDir/meta"),
-      s"SQ8 vector store at $indexDir")
-    val (mns, mxs) = storedRanges(spark, indexDir)
-    Sq8Artifacts(
-      ArtifactCache.localFrame(spark, s"$indexDir/centroids"), mns, mxs)
-  }
-
-  private def appendSq8(
-      art: Sq8Artifacts, df: DataFrame, idCol: String, vecCol: String,
-      indexDir: String, batchId: Long): Unit = {
-    MaintenanceLease.refuseIfHeld(
-      df.sparkSession, indexDir, s"append batch=$batchId")
-    Similarity.assignWith(art.cent,
-        checkedWidth(df.select(col(idCol), col(vecCol)), vecCol,
-          art.mns.length, indexDir),
-        idCol, vecCol)
-      .select(col(idCol),
-        graft.functions.Sq8Quantize.sq8Quantize(
-          col(vecCol).cast("array<float>"), art.mns, art.mxs).as("qv"),
-        col("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite")
-      .partitionBy("cell")
-      .parquet(s"$indexDir/cells/batch=$batchId")
-    BatchIndex.stampBatch(df.sparkSession, s"$indexDir/cells", batchId)
-  }
-
-  /** Streaming writer for the SQ8 store (pinned artifacts loaded once
-    * at construction). Start with `.start()`. */
-  def sq8IndexStreamTo(
-      vectors: DataFrame, idCol: String, vecCol: String,
-      indexDir: String, checkpointDir: String)(
-      emit: (DataFrame, Long) => Unit = (_, _) => ()): DataStreamWriter[Row] = {
-    val art = loadSq8Artifacts(vectors.sparkSession, indexDir)
-    streamTo(vectors, checkpointDir,
-      (b, i) => {
-        require(i >= 0, s"batchId must be non-negative, got $i")
-        appendSq8(art, b, idCol, vecCol, indexDir, i)
-      }, emit)
-  }
-
-  private def storedRanges(
-      spark: SparkSession, indexDir: String): (Seq[Double], Seq[Double]) = {
-    // signature-cached artifact; sorted driver-side (an orderBy over a
-    // LocalRelation would plan a real Spark job for dim rows)
-    val rows = ArtifactCache.localFrame(spark, s"$indexDir/ranges")
-      .collect().sortBy(_.getLong(0))
-    (rows.map(_.getDouble(1)).toSeq, rows.map(_.getDouble(2)).toSeq)
-  }
-
-  /** Centroids + SQ8 ranges, the pinned artifacts the two quantized
-    * seeds share. Returns the LOCALIZED centroid frame alongside the
-    * ranges so the seed append can reuse them in-memory (one corpus
-    * pass per artifact, zero read-backs — the bytes on disk are
-    * written FROM the same driver-side rows the append consumes). */
-  private def writeCentroidsAndRanges(
-      corpus: DataFrame, idCol: String, vecCol: String, indexDir: String,
-      nLists: Int): (DataFrame, Seq[Double], Seq[Double]) = {
-    val spark = corpus.sparkSession
-    val cent = localized(
-      Similarity.ivfCentroids(corpus, idCol, vecCol, nLists))
-    cent.coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexDir/centroids")
-    primeLocal(cent, s"$indexDir/centroids")
-    val (mns, mxs) = Similarity.sq8Ranges(corpus, vecCol)
-    import spark.implicits._
-    val ranges = mns.indices.map(i => (i.toLong, mns(i), mxs(i)))
-      .toDF("i", "mn", "mx")
-    ranges.coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexDir/ranges")
-    primeLocal(ranges, s"$indexDir/ranges")
-    (cent, mns, mxs)
-  }
-
-  /** Quantized kernels min-length silently: a vector wider or narrower
-    * than the pinned grid would rank on a truncated prefix and return
-    * plausible-but-wrong neighbors. Both the append and probe sides of
-    * the quantized stores run every vector through this loud check
-    * instead (the width is authoritative: it IS the stored grid's). */
-  private def checkedWidth(
-      df: DataFrame, vecCol: String, dim: Int, indexDir: String): DataFrame =
-    df.withColumn(vecCol,
-      when(size(col(vecCol)) === lit(dim), col(vecCol))
-        .otherwise(raise_error(concat(
-          lit(s"vector width "), size(col(vecCol)).cast("string"),
-          lit(s" does not match the $dim-dimension grid pinned at " +
-            s"$indexDir — quantized codes are only comparable at the " +
-            "stored width")))))
-
-  /** Seed the PRODUCT-QUANTIZED variant of the store — the last cell
-    * of the serving matrix (Flat/SQ8/PQ x written/streamed): centroids,
-    * the SQ8 grid, AND the PQ codebook are all trained on the seed
-    * corpus and pinned; batches store m code bytes per vector (32x).
-    * The same pinned-artifact argument applies to all three: stored
-    * codes are only decodable under the codebook that produced them. */
-  def seedPqIndex(
-      corpus: DataFrame, idCol: String, vecCol: String, indexDir: String,
-      nLists: Int = 8, m: Int = 8, dim: Int = 64, kCent: Int = 16): Unit = {
-    val spark = corpus.sparkSession
-    // ONE md5-ranked TakeOrdered pass serves BOTH pinned samples: the
-    // coarse centroids are the first nLists rows of the codebook's
-    // kCent sample under the same (md5(id), id) total order
-    // ([[Similarity.ivfCentroids]] and [[Similarity.pqCodebook]] share
-    // it, and ids are unique so the order has no ties) — the seed pays
-    // one corpus sample pass instead of two (guide §1.2: fewer passes;
-    // the bytes written are identical to the two-pass layout).
-    val sample = Similarity.centroidSample(
-      corpus, idCol, vecCol, math.max(nLists, kCent))
-    val cent = sample.centFrame(spark, nLists)
-    cent.coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexDir/centroids")
-    primeLocal(cent, s"$indexDir/centroids")
-    val (mns, mxs) = Similarity.sq8Ranges(corpus, vecCol)
-    import spark.implicits._
-    val ranges = mns.indices.map(i => (i.toLong, mns(i), mxs(i)))
-      .toDF("i", "mn", "mx")
-    ranges.coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexDir/ranges")
-    primeLocal(ranges, s"$indexDir/ranges")
-    val codebook = Similarity.pqCodebookFromSample(spark,
-      sample.floatVecs(kCent), m, dim, mns, mxs)
-    codebook.coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexDir/codebook")
-    primeLocal(codebook, s"$indexDir/codebook")
-    val meta = StoreLayout.stamp(
-      Seq((nLists.toLong, m.toLong, dim.toLong, kCent.toLong))
-        .toDF("nLists", "m", "dim", "kCent"))
-    meta.coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexDir/meta")
-    primeLocal(meta, s"$indexDir/meta")
-    // same artifact-reuse argument as [[seedSq8Index]]: four loads
-    // (meta + ranges + centroids + codebook) saved per seed
-    appendPq(PqArtifacts(cent, codebook, m, dim, mns, mxs), corpus,
-      idCol, vecCol, indexDir, -1L)
-  }
-
-  /** Append one batch to the PQ store: full-precision cell assignment,
-    * m-code payload encoded under the pinned grid + codebook. */
-  def appendPqBatch(
-      batch: DataFrame, idCol: String, vecCol: String, indexDir: String,
-      batchId: Long): Unit = {
-    require(batchId >= 0, s"batchId must be non-negative, got $batchId " +
-      "(batch -1 is the seed partition)")
-    appendPq(loadPqArtifacts(batch.sparkSession, indexDir), batch,
-      idCol, vecCol, indexDir, batchId)
-  }
-
-  private final case class PqArtifacts(
-      cent: DataFrame, codebook: DataFrame, m: Int, dim: Int,
-      mns: Seq[Double], mxs: Seq[Double]) {
-    /** The codebook as the driver-side [s][j] -> qsub table the
-      * single-pass encode/LUT kernels embed as literals (the codebook
-      * frame is local, so this is a cheap in-memory pivot). */
-    @transient lazy val cb: Array[Array[Array[Long]]] =
-      Similarity.collectedCodebook(codebook, m)
-    def kCent: Int = cb(0).length
-  }
-
-  private def loadPqArtifacts(
-      spark: SparkSession, indexDir: String): PqArtifacts = {
-    // all four pinned artifacts come through the signature-keyed
-    // [[ArtifactCache]]: a cold load pays the same reads as before, a
-    // warm one costs four FS listings and zero Spark jobs
-    val meta = StoreLayout.migrated(
-        ArtifactCache.localFrame(spark, s"$indexDir/meta"),
-        s"PQ vector store at $indexDir")
-      .collect()(0)
-    val (mns, mxs) = storedRanges(spark, indexDir)
-    PqArtifacts(
-      ArtifactCache.localFrame(spark, s"$indexDir/centroids"),
-      ArtifactCache.localFrame(spark, s"$indexDir/codebook"),
-      meta.getAs[Long]("m").toInt, meta.getAs[Long]("dim").toInt, mns, mxs)
-  }
-
-  private def appendPq(
-      art: PqArtifacts, df: DataFrame, idCol: String, vecCol: String,
-      indexDir: String, batchId: Long): Unit = {
-    MaintenanceLease.refuseIfHeld(
-      df.sparkSession, indexDir, s"append batch=$batchId")
-    // assignWith's groupBy collapses duplicate-id rows to one (min_by
-    // cell + first vector) BEFORE encoding, and the m code bytes ride
-    // that one exchange as a single-pass codegen column
-    // ([[Similarity.pqCodesColumn]] — identical argmin/tie-break to
-    // the explode-join encode, minus its three extra shuffles): the
-    // batch reaches the cell writer in one pass
-    Similarity.assignWith(art.cent,
-        checkedWidth(df.select(col(idCol), col(vecCol)), vecCol,
-          art.dim, indexDir),
-        idCol, vecCol)
-      .select(col(idCol),
-        Similarity.pqCodesColumn(
-          graft.functions.Sq8Quantize.sq8Quantize(
-            col(vecCol), art.mns, art.mxs),
-          art.cb, art.dim).as("codes"),
-        col("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite")
-      .partitionBy("cell")
-      .parquet(s"$indexDir/cells/batch=$batchId")
-    BatchIndex.stampBatch(df.sparkSession, s"$indexDir/cells", batchId)
-  }
-
-  /** Streaming writer for the PQ store (pinned artifacts loaded once
-    * at construction). Start with `.start()`. */
-  def pqIndexStreamTo(
-      vectors: DataFrame, idCol: String, vecCol: String,
-      indexDir: String, checkpointDir: String)(
-      emit: (DataFrame, Long) => Unit = (_, _) => ()): DataStreamWriter[Row] = {
-    val art = loadPqArtifacts(vectors.sparkSession, indexDir)
-    streamTo(vectors, checkpointDir,
-      (b, i) => {
-        require(i >= 0, s"batchId must be non-negative, got $i")
-        appendPq(art, b, idCol, vecCol, indexDir, i)
-      }, emit)
-  }
-
-  /** Top-k over the PQ store before `beforeBatch`: the query builds
-    * its ADC lookup table under the PINNED grid + codebook, and only
-    * the probed cell directories of surviving batch partitions are
-    * scanned — m code bytes per candidate. Integer (dist, id) in-cell
-    * ranking, hash-exact against the oracle. */
-  def pqTopKFromIndex(
-      spark: SparkSession, indexDir: String, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nProbe: Int = 1,
-      beforeBatch: Long = Long.MaxValue): DataFrame = {
-    val art = loadPqArtifacts(spark, indexDir)
-    val checkedQueries = checkedWidth(
-      queries.select(col(idCol), col(vecCol)), vecCol, art.dim, indexDir)
-    val q = checkedQueries
-      .select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    // the flattened per-query ADC LUT rides the probe frame
-    // ([[Similarity.pqLutFlatColumn]]), so the stored code arrays rank
-    // through ONE expression per candidate row — no m-way posexplode
-    // of the scan, no (query, neighbor) re-aggregation exchange
-    val qc =
-      (if (nProbe <= 1) Similarity.assignWith(art.cent, q, "query_id", "q_vec")
-       else Similarity.probeCells(art.cent, q, "query_id", "q_vec", nProbe))
-        .select(col("query_id"), col("cell").as("q_cell"),
-          Similarity.pqLutFlatColumn(
-            graft.functions.Sq8Quantize.sq8Quantize(
-              col("q_vec"), art.mns, art.mxs),
-            art.cb, art.dim).as("dflat"))
-    val probedCells = qc.select(col("q_cell")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val cellFilter =
-      if (probedCells.isEmpty) lit(false)
-      else expr(s"cell IN (${probedCells.mkString(",")})")
-    val codes = latestPerId(
-      readCells(spark, indexDir, beforeBatch, cellFilter)
-        .select(col(idCol).as("neighbor_id"),
-          col("cell").cast("long").as("cell"), col("codes"), col("batch")),
-      "neighbor_id", Seq("cell", "codes"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist"), col("neighbor_id"))
-    codes
-      .join(broadcast(qc), col("cell") === col("q_cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("dist",
-        Similarity.adcDistColumn(col("codes"), col("dflat"), art.m, art.kCent))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("dist"))
-  }
-
-  /** [[filteredTopKFromIndex]] for the PQ store — the predicate and
-    * takedown list composed into the m-bytes-per-candidate ADC scan:
-    * candidates are `allowedIds`-restricted and `excludeIds`-subtracted
-    * after latest-batch-wins resolution, BEFORE the code explode, so
-    * filtered-out rows never pay the per-subvector join. With
-    * `minCandidates > 0` the probe depth is chosen per query from the
-    * SERVABLE per-cell counts (an (id, cell)-only scan, no codes) —
-    * a sharp predicate probes deep, an unselective one stays at the
-    * nearest cell, and the choice is a deterministic integer function
-    * of the store. */
-  def pqFilteredTopKFromIndex(
-      spark: SparkSession, indexDir: String, queries: DataFrame,
-      idCol: String, vecCol: String, allowedIds: DataFrame, k: Int,
-      nProbe: Int = 1, minCandidates: Long = 0L,
-      beforeBatch: Long = Long.MaxValue,
-      excludeIds: Option[DataFrame] = None): DataFrame = {
-    val art = loadPqArtifacts(spark, indexDir)
-    val allowed = allowedIds
-      .select(col(allowedIds.columns.head).as("__allowed_id")).distinct()
-    val checkedQueries = checkedWidth(
-      queries.select(col(idCol), col(vecCol)), vecCol, art.dim, indexDir)
-    val q = checkedQueries
-      .select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    // the flattened per-query ADC LUT rides the probe frame (same
-    // shape as [[pqTopKFromIndex]]): one expression per candidate row,
-    // no posexplode, no re-aggregation exchange — the predicate/
-    // takedown restriction still lands BEFORE any distance work
-    val qc =
-      (if (minCandidates > 0L)
-         Similarity.autoProbeSets(art.cent,
-             filteredCellCounts(spark, indexDir, idCol, beforeBatch,
-               allowed, excludeIds),
-             checkedQueries, idCol, vecCol, minCandidates)
-       else if (nProbe <= 1)
-         Similarity.assignWith(art.cent, q, "query_id", "q_vec")
-       else Similarity.probeCells(art.cent, q, "query_id", "q_vec", nProbe))
-        .select(col("query_id"), col("cell").as("q_cell"),
-          Similarity.pqLutFlatColumn(
-            graft.functions.Sq8Quantize.sq8Quantize(
-              col("q_vec"), art.mns, art.mxs),
-            art.cb, art.dim).as("dflat"))
-    val probedCells = qc.select(col("q_cell")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val cellFilter =
-      if (probedCells.isEmpty) lit(false)
-      else expr(s"cell IN (${probedCells.mkString(",")})")
-    val codes = servedRows(latestPerId(
-        readCells(spark, indexDir, beforeBatch, cellFilter)
-          .select(col(idCol).as("neighbor_id"),
-            col("cell").cast("long").as("cell"), col("codes"), col("batch")),
-        "neighbor_id", Seq("cell", "codes")), "neighbor_id",
-      allowed, excludeIds)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist"), col("neighbor_id"))
-    codes
-      .join(broadcast(qc), col("cell") === col("q_cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("dist",
-        Similarity.adcDistColumn(col("codes"), col("dflat"), art.m, art.kCent))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("dist"))
-  }
-
   /** Two-stage PQ + exact refine SERVED FROM STREAMED STORES — the
     * streamed face of [[Similarity.pqRefinedTopKFromIndex]] (Faiss
     * IndexRefineFlat over a live index): the ADC shortlist runs
-    * against THIS store's codes ([[pqTopKFromIndex]] at k = rerankR:
+    * against THIS store's codes ([[topKFromIndex]] at k = rerankR:
     * pinned grid + codebook, probed-cell pruning, fenced batches),
     * then the |Q| x rerankR candidate ids are collected driver-side
     * (the same bounded-artifact posture as the ADC LUT) and pushed as
@@ -1058,7 +649,7 @@ object VectorIndexStream {
       rerankR: Int, nProbe: Int = 1,
       beforeBatch: Long = Long.MaxValue): DataFrame = {
     require(rerankR >= k, s"rerankR=$rerankR must be >= k=$k")
-    val shortlist = pqTopKFromIndex(spark, pqIndexDir, queries,
+    val shortlist = topKFromIndex(spark, pqIndexDir, queries,
         idCol, vecCol, k = rerankR, nProbe = nProbe,
         beforeBatch = beforeBatch)
       .select(col("query_id"), col("neighbor_id"))
@@ -1085,103 +676,6 @@ object VectorIndexStream {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"))
-  }
-
-  /** Top-k over the SQ8 store before `beforeBatch`: the query is
-    * quantized under the PINNED ranges and integer-L2 ranked against
-    * the stored codes of its probed cells (statically pruned, fenced).
-    * Identical ranking to [[graft.similarity.Similarity.ivfSq8TopK]]
-    * when centroids/ranges come from the same corpus — the fused
-    * kernel quantizes both sides under the same grid. */
-  def sq8TopKFromIndex(
-      spark: SparkSession, indexDir: String, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nProbe: Int = 1,
-      beforeBatch: Long = Long.MaxValue): DataFrame = {
-    val art = loadSq8Artifacts(spark, indexDir)
-    val q = checkedWidth(
-        queries.select(col(idCol), col(vecCol)), vecCol, art.mns.length, indexDir)
-      .select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val qc =
-      (if (nProbe <= 1) Similarity.assignWith(art.cent, q, "query_id", "q_vec")
-       else Similarity.probeCells(art.cent, q, "query_id", "q_vec", nProbe))
-        .select(col("query_id"), col("cell"),
-          graft.functions.Sq8Quantize.sq8Quantize(
-            col("q_vec").cast("array<float>"), art.mns, art.mxs).as("q_qv"))
-    val probedCells = qc.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val cellFilter =
-      if (probedCells.isEmpty) lit(false)
-      else expr(s"cell IN (${probedCells.mkString(",")})")
-    val cc = latestPerId(
-      readCells(spark, indexDir, beforeBatch, cellFilter)
-        .select(col(idCol).as("neighbor_id"),
-          col("cell").cast("long").as("cell"), col("qv"), col("batch")),
-      "neighbor_id", Seq("cell", "qv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist"), col("neighbor_id"))
-    cc.join(broadcast(qc), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("dist",
-        graft.functions.IntArrayL2.intArrayL2(col("q_qv"), col("qv")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("dist"))
-  }
-
-  /** [[filteredTopKFromIndex]] for the SQ8 store — the production
-    * request shape (a metadata predicate and a takedown list on every
-    * probe) WITHOUT giving up the 4x-narrower code scan: candidates
-    * are restricted to `allowedIds` and `excludeIds`-subtracted after
-    * latest-batch-wins resolution and before ranking, exactly as the
-    * flat serve, but the scan reads stored SQ8 codes and ranks by
-    * integer L2 under the pinned grid. `minCandidates > 0` switches
-    * to the per-query auto probe depth over SERVABLE (filtered,
-    * takedown-subtracted) per-cell counts — the count pass reads only
-    * the store's (id, cell) columns, never the codes. */
-  def sq8FilteredTopKFromIndex(
-      spark: SparkSession, indexDir: String, queries: DataFrame,
-      idCol: String, vecCol: String, allowedIds: DataFrame, k: Int,
-      nProbe: Int = 1, minCandidates: Long = 0L,
-      beforeBatch: Long = Long.MaxValue,
-      excludeIds: Option[DataFrame] = None): DataFrame = {
-    val art = loadSq8Artifacts(spark, indexDir)
-    val allowed = allowedIds
-      .select(col(allowedIds.columns.head).as("__allowed_id")).distinct()
-    val qBase = checkedWidth(
-      queries.select(col(idCol), col(vecCol)), vecCol, art.mns.length,
-      indexDir)
-    val q = qBase.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val cells0 =
-      if (minCandidates > 0L)
-        Similarity.autoProbeSets(art.cent,
-            filteredCellCounts(spark, indexDir, idCol, beforeBatch,
-              allowed, excludeIds),
-            qBase, idCol, vecCol, minCandidates)
-      else if (nProbe <= 1) Similarity.assignWith(art.cent, q, "query_id", "q_vec")
-      else Similarity.probeCells(art.cent, q, "query_id", "q_vec", nProbe)
-    val qc = cells0.select(col("query_id"), col("cell"),
-      graft.functions.Sq8Quantize.sq8Quantize(
-        col("q_vec").cast("array<float>"), art.mns, art.mxs).as("q_qv"))
-    val probedCells = qc.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val cellFilter =
-      if (probedCells.isEmpty) lit(false)
-      else expr(s"cell IN (${probedCells.mkString(",")})")
-    val cc = servedRows(latestPerId(
-        readCells(spark, indexDir, beforeBatch, cellFilter)
-          .select(col(idCol).as("neighbor_id"),
-            col("cell").cast("long").as("cell"), col("qv"), col("batch")),
-        "neighbor_id", Seq("cell", "qv")), "neighbor_id",
-      allowed, excludeIds)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist"), col("neighbor_id"))
-    cc.join(broadcast(qc), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("dist",
-        graft.functions.IntArrayL2.intArrayL2(col("q_qv"), col("qv")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("dist"))
   }
 
   /** Quantizer-drift report — the store-health gauge a PINNED
@@ -1243,61 +737,67 @@ object VectorIndexStream {
         col("seed_max_share_millis"), col("reseed_recommended"))
   }
 
+
   /** APPLY half of the quantizer-drift loop
-    * ([[occupancyDriftReport]]/[[sq8BoundaryReport]] measure, this
-    * acts): re-seed a drifted FLAT store into `newIndexDir` with a
-    * quantizer RETRAINED on the store's own LIVE corpus — every id's
+    * ([[occupancyDriftReport]]/[[sq8BoundaryReport]]/
+    * [[pqCodeUsageReport]] measure, this acts): re-seed a drifted store
+    * into `newIndexDir`, same codec, with every pinned artifact
+    * RETRAINED on the store's own LIVE corpus — every live id's
     * latest-batch-wins vector, tombstones subtracted — so the new
-    * centroids span the distribution the store actually holds now,
-    * not the one it held at seed time. The standard IVF re-train
-    * trade: cell ids are NOT comparable across the two stores (they
-    * never are across quantizers), so the rebuild lands in a fresh
-    * directory and serving cuts over atomically by path; the old
-    * store stays intact for as-of reads until retired.
+    * quantizer spans the distribution the store holds now, not the one
+    * it held at seed time. The standard IVF re-train trade: cell ids
+    * and codes are NOT comparable across quantizers, so the rebuild
+    * lands in a fresh directory and serving cuts over atomically by
+    * [[StorePointer.publish]]; the old store stays intact for as-of
+    * reads until retired.
     *
-    * Flat stores only: the rebuild re-encodes from the stored
-    * full-precision vectors. The quantized stores store CODES — the
-    * original vectors are gone, so a rebuild must re-ingest from the
-    * source corpus (refused loudly here, not approximated by
-    * round-tripping codes: decode-re-encode would bake the OLD grid's
-    * quantization error into the NEW store permanently). */
+    * The live vectors come from the store itself for a flat store, or
+    * from `sourceCorpus` ([[liveCorpusFromSource]]: the store's live
+    * ids joined back to the upstream corpus). A quantized store holds
+    * CODES — its original vectors are gone — so it needs the source
+    * and refuses loudly without one: decode-re-encode would bake the
+    * old grid's quantization error into the new store permanently. */
   def rebuildIndex(
       spark: SparkSession, indexDir: String, newIndexDir: String,
       idCol: String, vecCol: String, nLists: Int = 8,
-      beforeBatch: Long = Long.MaxValue): Unit = {
+      beforeBatch: Long = Long.MaxValue,
+      sourceCorpus: Option[DataFrame] = None): Unit = {
     require(newIndexDir != indexDir,
       "rebuildIndex writes a FRESH store — cell ids are not comparable " +
         "across quantizers, so rebuilding in place would corrupt every " +
         "concurrent reader; pass a new directory and cut over by path")
-    val cells = readCells(spark, indexDir, beforeBatch)
-    if (!cells.columns.contains(vecCol))
+    val codec = pinnedAt(spark, indexDir).codec
+    if (codec != VectorCodec.Flat && sourceCorpus.isEmpty)
       throw new IllegalStateException(
         s"store at $indexDir holds no '$vecCol' column — a quantized " +
           "(SQ8/PQ) store stores codes, not vectors; rebuild it by " +
           "re-ingesting the source corpus (decode-re-encode would bake " +
           "the old grid's quantization error into the new store)")
     // materialize the live corpus ONCE: the seed consumes it in
-    // SEPARATE ACTIONS (centroid sample, the cell write), and as a lazy
-    // lineage each action re-runs the store scan + latestPerId shuffle
-    // + tombstone resolution (guide §1.2 — the cross-action case where
-    // a localCheckpoint pays, unlike the one-action plans measured and
-    // reverted in r18). Blocks are freed when the seed returns.
-    val live = latestPerId(
-        cells.select(col(idCol), col(vecCol), col("batch")),
-        idCol, Seq(vecCol))
-      .join(broadcast(
-          deadIds(spark, indexDir, idCol, Some(beforeBatch))
-            .select(col(idCol))),
-        Seq(idCol), "left_anti")
+    // SEPARATE ACTIONS (centroid sample, ranges, the cell write), and
+    // as a lazy lineage each action re-runs the store scan + latestPerId
+    // shuffle (or the source join) + tombstone resolution (guide §1.2 —
+    // the cross-action case where a localCheckpoint pays). Blocks are
+    // freed when the seed returns.
+    val live = sourceCorpus.fold(
+        latestPerId(
+            readCells(spark, indexDir, beforeBatch)
+              .select(col(idCol), col(vecCol), col("batch")),
+            idCol, Seq(vecCol))
+          .join(broadcast(
+              deadIds(spark, indexDir, idCol, Some(beforeBatch))
+                .select(col(idCol))),
+            Seq(idCol), "left_anti"))(
+        liveCorpusFromSource(spark, indexDir, _, idCol, vecCol, beforeBatch))
       .select(col(idCol), col(vecCol))
       .localCheckpoint()
-    try seedIndex(live, idCol, vecCol, newIndexDir, nLists)
+    try seedIndex(live, idCol, vecCol, newIndexDir, nLists, codec = codec)
     finally NearDedupStream.dropLocalCheckpoint(live)
   }
 
   /** The LIVE ids' full-precision vectors re-ingested from the SOURCE
     * corpus — the quantized-store rebuild path ([[rebuildIndex]]'s
-    * refusal message's own prescription): the store's live id set
+    * `sourceCorpus`): the store's live id set
     * (latest-batch-wins survivors minus [[deadIds]]) joins back to the
     * upstream corpus that still holds the original vectors. A live id
     * MISSING from the source refuses loudly at execution — a rebuild
@@ -1330,59 +830,6 @@ object VectorIndexStream {
               "fix the source feed or tombstone the id first")))))
   }
 
-  /** Close the quantized-store drift loop for the SQ8 store: when
-    * [[sq8BoundaryReport]] flags `regrid_recommended`, the pinned grid
-    * no longer spans the data — but the store holds CODES, so the
-    * original vectors must be re-ingested from the SOURCE corpus (the
-    * grid cannot be retrained from its own saturated output, and
-    * decode-re-encode would bake the old grid's error into the new
-    * store permanently). This re-reads every live id's full-precision
-    * vector from `sourceCorpus`, retrains centroids AND the
-    * per-dimension ranges on that corpus, and seeds `newIndexDir`
-    * fresh ([[seedSq8Index]]); serving then cuts over atomically via
-    * [[StorePointer.publish]] — cell ids and codes are never
-    * comparable across grids, so a fresh directory + pointer cutover
-    * is the only safe shape, exactly as [[rebuildIndex]]. */
-  def rebuildSq8Index(
-      spark: SparkSession, indexDir: String, newIndexDir: String,
-      sourceCorpus: DataFrame, idCol: String, vecCol: String,
-      nLists: Int = 8, beforeBatch: Long = Long.MaxValue): Unit = {
-    require(newIndexDir != indexDir,
-      "rebuildSq8Index writes a FRESH store — codes are not comparable " +
-        "across grids, so rebuilding in place would corrupt every " +
-        "concurrent reader; pass a new directory and cut over by path")
-    // one execution of the re-ingestion join, not one per seed action
-    // (centroid sample + ranges + cell write): see [[rebuildIndex]]
-    val live = liveCorpusFromSource(spark, indexDir, sourceCorpus, idCol,
-        vecCol, beforeBatch).select(col(idCol), col(vecCol))
-      .localCheckpoint()
-    try seedSq8Index(live, idCol, vecCol, newIndexDir, nLists)
-    finally NearDedupStream.dropLocalCheckpoint(live)
-  }
-
-  /** [[rebuildSq8Index]] for the PQ store: live ids re-ingested from
-    * the source corpus, centroids + SQ8 grid + PQ codebook ALL
-    * retrained on it, fresh store seeded ([[seedPqIndex]]), cutover by
-    * pointer. Same argument — stored m-byte codes are only decodable
-    * under the codebook that produced them, and a codebook trained on
-    * decoded codes would inherit the old quantization error. */
-  def rebuildPqIndex(
-      spark: SparkSession, indexDir: String, newIndexDir: String,
-      sourceCorpus: DataFrame, idCol: String, vecCol: String,
-      nLists: Int = 8, m: Int = 8, dim: Int = 64, kCent: Int = 16,
-      beforeBatch: Long = Long.MaxValue): Unit = {
-    require(newIndexDir != indexDir,
-      "rebuildPqIndex writes a FRESH store — codes are not comparable " +
-        "across codebooks, so rebuilding in place would corrupt every " +
-        "concurrent reader; pass a new directory and cut over by path")
-    // one execution of the re-ingestion join, not one per seed action
-    // (sample + ranges + cell write): see [[rebuildIndex]]
-    val live = liveCorpusFromSource(spark, indexDir, sourceCorpus, idCol,
-        vecCol, beforeBatch).select(col(idCol), col(vecCol))
-      .localCheckpoint()
-    try seedPqIndex(live, idCol, vecCol, newIndexDir, nLists, m, dim, kCent)
-    finally NearDedupStream.dropLocalCheckpoint(live)
-  }
 
   /** RANGE-drift gauge for the SQ8 store — [[occupancyDriftReport]]'s
     * complement: occupancy catches DIRECTION drift (batches
@@ -1452,7 +899,7 @@ object VectorIndexStream {
     * `recode_recommended` when a batch's worst share exceeds the
     * seed's by `driftFactorMillis`/1000 (default 2x). A flagged batch
     * means the pinned codebook no longer spans the data — re-ingest
-    * from the source and retrain ([[rebuildPqIndex]] + pointer
+    * from the source and retrain ([[rebuildIndex]] + pointer
     * cutover, the q284 path). Pure integer decision — hash-exact. */
   def pqCodeUsageReport(
       spark: SparkSession, indexDir: String,
@@ -1497,6 +944,7 @@ object VectorIndexStream {
         col("seed_max_share_millis"), col("recode_recommended"))
   }
 
+
   /** The serve-time admission pipeline every FILTERED probe shares,
     * applied AFTER latest-batch-wins resolution and BEFORE ranking:
     * keep only `allowed` ids (broadcast semi-join — the request's
@@ -1506,15 +954,10 @@ object VectorIndexStream {
     * `__allowed_id` frame. */
   private def servedRows(
       rows: DataFrame, id: String, allowed: DataFrame,
-      excludeIds: Option[DataFrame]): DataFrame = {
-    val kept = rows.join(broadcast(allowed),
-      col(id) === col("__allowed_id"), "left_semi")
-    excludeIds.fold(kept) { ex =>
-      kept.join(broadcast(
-          ex.select(col(ex.columns.head).as(id)).distinct()),
-        Seq(id), "left_anti")
-    }
-  }
+      excludeIds: Option[DataFrame]): DataFrame =
+    VectorCodec.excluding(
+      rows.join(broadcast(allowed), col(id) === col("__allowed_id"), "left_semi"),
+      id, excludeIds)
 
   /** Per-cell SERVABLE candidate counts under the request's predicate
     * and takedown list — the exact floor statistic the auto-probe
@@ -1580,23 +1023,62 @@ object VectorIndexStream {
       .filter(col("batch") < beforeBatch && cellFilter)
   }
 
+
+  /** The store's candidate rows for one probe: the probed cells of the
+    * batches admitted before `beforeBatch`, resolved latest-batch-wins
+    * per id, then passed through `admit` (the filtered serve's
+    * predicate and takedown list). */
+  private def storeCandidates(
+      spark: SparkSession, indexDir: String, idCol: String, stored: String,
+      beforeBatch: Long, admit: DataFrame => DataFrame)(
+      cellFilter: org.apache.spark.sql.Column): DataFrame =
+    admit(latestPerId(
+      readCells(spark, indexDir, beforeBatch, cellFilter)
+        .select(col(idCol).as("neighbor_id"),
+          col("cell").cast("long").as("cell"), col(stored).as("c_pay"),
+          col("batch")),
+      "neighbor_id", Seq("cell", "c_pay")))
+
+  /** Top-k over everything admitted before `beforeBatch` (default: all
+    * history), served from the stored artifacts alone through the one
+    * IVF probe ([[VectorCodec.topK]]): queries assign against the
+    * stored centroids, the probe set becomes a literal IN (static
+    * partition pruning on the cell sub-directories of every surviving
+    * batch partition), and the store's codec ranks in-cell — exact
+    * cosine for a flat store (with the same centroids, identical to the
+    * inline deterministic IVF over the union of everything admitted),
+    * integer L2 under the pinned grid for SQ8 (identical to
+    * [[Similarity.ivfSq8TopK]] under the same grid), the ADC distance
+    * under the pinned codebook for PQ. Flat returns (query_id, rank,
+    * neighbor_id); the quantized codecs add their integer `dist`, so
+    * their (dist, id) ranking is hash-exact against the oracle. */
+  def topKFromIndex(
+      spark: SparkSession, indexDir: String, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int, nProbe: Int = 1,
+      beforeBatch: Long = Long.MaxValue): DataFrame = {
+    val pinned = pinnedAt(spark, indexDir)
+    VectorCodec.topK(pinned, indexDir, queries, idCol, vecCol, k, nProbe, None,
+      storeCandidates(spark, indexDir, idCol, pinned.storedCol(vecCol),
+        beforeBatch, identity))
+  }
+
   /** Metadata-FILTERED top-k served from the STREAMED store — the
     * production vector-serving shape (ONE shared index, a
     * label/language/license predicate on every request) composed with
-    * the store's whole lifecycle (fences, appends, compaction):
-    * candidates are restricted to `allowedIds` (a single-column id
-    * frame, broadcast — compute it from the metadata dimension with
-    * the request's predicate) AFTER latest-batch-wins resolution and
-    * BEFORE ranking, so a filtered-out top hit is replaced by the
-    * next-best allowed vector, never a shortened top-k.
+    * the store's whole lifecycle (fences, appends, compaction), for
+    * every codec: candidates are restricted to `allowedIds` (a
+    * single-column id frame, broadcast — compute it from the metadata
+    * dimension with the request's predicate) AFTER latest-batch-wins
+    * resolution and BEFORE ranking, so a filtered-out top hit is
+    * replaced by the next-best allowed vector, never a shortened top-k.
     *
     * Probe width: fixed `nProbe` by default; `minCandidates > 0`
     * switches to the per-query AUTO choice
     * ([[graft.similarity.Similarity.autoProbeSets]] — the shortest
     * ranked-cell prefix whose exact allowed-candidate count clears
     * the floor). The count pass scans only the store's (id, cell)
-    * columns — a deployment maintaining per-cell metadata counts as
-    * store stats serves it without any scan.
+    * columns, never the payload — a sharp predicate probes deep, an
+    * unselective one stays at the nearest cell.
     *
     * `excludeIds` composes the DELETE path into the same serve (pass
     * [[deadIds]]): tombstoned ids are subtracted alongside the
@@ -1609,96 +1091,31 @@ object VectorIndexStream {
       nProbe: Int = 1, minCandidates: Long = 0L,
       beforeBatch: Long = Long.MaxValue,
       excludeIds: Option[DataFrame] = None): DataFrame = {
-    StoreLayout.migrated(ArtifactCache.localFrame(spark, s"$indexDir/meta"),
-      s"vector store at $indexDir")
-    val cent = ArtifactCache.localFrame(spark, s"$indexDir/centroids")
+    val pinned = pinnedAt(spark, indexDir)
     val allowed = allowedIds
       .select(col(allowedIds.columns.head).as("__allowed_id")).distinct()
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val qc =
+    val autoProbe =
       if (minCandidates > 0L)
-        Similarity.autoProbeSets(cent,
-            filteredCellCounts(spark, indexDir, idCol, beforeBatch,
-              allowed, excludeIds),
-            queries, idCol, vecCol, minCandidates)
-          .select(col("query_id"), col("q_vec"), col("cell"))
-      else if (nProbe <= 1) Similarity.assignWith(cent, q, "query_id", "q_vec")
-      else Similarity.probeCells(cent, q, "query_id", "q_vec", nProbe)
-    val probedCells = qc.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val cellFilter =
-      if (probedCells.isEmpty) lit(false)
-      else expr(s"cell IN (${probedCells.mkString(",")})")
-    val cc = servedRows(latestPerId(
-        readCells(spark, indexDir, beforeBatch, cellFilter)
-          .select(col(idCol).as("neighbor_id"),
-            col("cell").cast("long").as("cell"),
-            col(vecCol).as("c_vec"), col("batch")),
-        "neighbor_id", Seq("cell", "c_vec")), "neighbor_id",
-      allowed, excludeIds)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    cc.join(broadcast(qc.select(col("query_id"), col("q_vec"), col("cell"))),
-        Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", graft.functions.VectorFunctions.cosineSim(
-        col("q_vec"), col("c_vec")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"))
+        Some((filteredCellCounts(spark, indexDir, idCol, beforeBatch,
+          allowed, excludeIds), minCandidates))
+      else None
+    VectorCodec.topK(pinned, indexDir, queries, idCol, vecCol, k, nProbe,
+      autoProbe,
+      storeCandidates(spark, indexDir, idCol, pinned.storedCol(vecCol),
+        beforeBatch, servedRows(_, "neighbor_id", allowed, excludeIds)))
   }
 
-  /** Top-k over everything admitted before `beforeBatch` (default: all
-    * history), served from the stored artifacts alone: queries assign
-    * against the stored centroids, the probe set becomes a literal IN
-    * (static partition pruning on the cell sub-directories of every
-    * surviving batch partition), exact cosine ranks in-cell. With the
-    * same centroids, identical to the inline deterministic IVF over
-    * the union of everything admitted — the spec's parity gate. */
-  def topKFromIndex(
-      spark: SparkSession, indexDir: String, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nProbe: Int = 1,
-      beforeBatch: Long = Long.MaxValue): DataFrame = {
-    StoreLayout.migrated(ArtifactCache.localFrame(spark, s"$indexDir/meta"),
-      s"vector store at $indexDir")
-    val cent = ArtifactCache.localFrame(spark, s"$indexDir/centroids")
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val qc =
-      if (nProbe <= 1) Similarity.assignWith(cent, q, "query_id", "q_vec")
-      else Similarity.probeCells(cent, q, "query_id", "q_vec", nProbe)
-    val probedCells = qc.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val cellFilter =
-      if (probedCells.isEmpty) lit(false)
-      else expr(s"cell IN (${probedCells.mkString(",")})")
-    val cc = latestPerId(
-      readCells(spark, indexDir, beforeBatch, cellFilter)
-        .select(col(idCol).as("neighbor_id"), col("cell").cast("long").as("cell"),
-          col(vecCol).as("c_vec"), col("batch")),
-      "neighbor_id", Seq("cell", "c_vec"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    cc.join(broadcast(qc.select(col("query_id"), col("q_vec"), col("cell"))),
-        Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", graft.functions.VectorFunctions.cosineSim(
-        col("q_vec"), col("c_vec")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"))
-  }
-
-  // ---- alias-routed serving: the production entry points. A rebuild
+  // ---- alias-routed serving: the production entry point. A rebuild
   // ships as fresh-directory + StorePointer cutover, so a serving call
   // site holding a RAW store path can silently keep reading the
   // retired generation after a cutover — the one operational mistake
-  // the alias exists to prevent. These wrappers resolve the alias
-  // (live by default, a PINNED past generation via `version`) and
-  // serve through the corresponding *FromIndex probe; pointer files
-  // are immutable once renamed, so the resolve-then-read pair is
-  // consistent no matter how many cutovers land in between (the
-  // resolved generation keeps serving its own artifacts). One listing
-  // + one small read per serve — noise against the probe itself.
+  // the alias exists to prevent. The wrapper resolves the alias (live
+  // by default, a PINNED past generation via `version`) and serves
+  // through [[topKFromIndex]]; pointer files are immutable once
+  // renamed, so the resolve-then-read pair is consistent no matter how
+  // many cutovers land in between (the resolved generation keeps
+  // serving its own artifacts and codec). One listing + one small read
+  // per serve — noise against the probe itself.
 
   private def resolved(
       spark: SparkSession, aliasDir: String, version: Option[Long]): String =
@@ -1713,58 +1130,4 @@ object VectorIndexStream {
       version: Option[Long] = None): DataFrame =
     topKFromIndex(spark, resolved(spark, aliasDir, version), queries,
       idCol, vecCol, k, nProbe, beforeBatch)
-
-  /** [[filteredTopKFromIndex]] routed through an alias. */
-  def filteredTopKFromAlias(
-      spark: SparkSession, aliasDir: String, queries: DataFrame,
-      idCol: String, vecCol: String, allowedIds: DataFrame, k: Int,
-      nProbe: Int = 1, minCandidates: Long = 0L,
-      beforeBatch: Long = Long.MaxValue,
-      excludeIds: Option[DataFrame] = None,
-      version: Option[Long] = None): DataFrame =
-    filteredTopKFromIndex(spark, resolved(spark, aliasDir, version),
-      queries, idCol, vecCol, allowedIds, k, nProbe, minCandidates,
-      beforeBatch, excludeIds)
-
-  /** [[sq8TopKFromIndex]] routed through an alias. */
-  def sq8TopKFromAlias(
-      spark: SparkSession, aliasDir: String, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nProbe: Int = 1,
-      beforeBatch: Long = Long.MaxValue,
-      version: Option[Long] = None): DataFrame =
-    sq8TopKFromIndex(spark, resolved(spark, aliasDir, version), queries,
-      idCol, vecCol, k, nProbe, beforeBatch)
-
-  /** [[sq8FilteredTopKFromIndex]] routed through an alias. */
-  def sq8FilteredTopKFromAlias(
-      spark: SparkSession, aliasDir: String, queries: DataFrame,
-      idCol: String, vecCol: String, allowedIds: DataFrame, k: Int,
-      nProbe: Int = 1, minCandidates: Long = 0L,
-      beforeBatch: Long = Long.MaxValue,
-      excludeIds: Option[DataFrame] = None,
-      version: Option[Long] = None): DataFrame =
-    sq8FilteredTopKFromIndex(spark, resolved(spark, aliasDir, version),
-      queries, idCol, vecCol, allowedIds, k, nProbe, minCandidates,
-      beforeBatch, excludeIds)
-
-  /** [[pqTopKFromIndex]] routed through an alias. */
-  def pqTopKFromAlias(
-      spark: SparkSession, aliasDir: String, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nProbe: Int = 1,
-      beforeBatch: Long = Long.MaxValue,
-      version: Option[Long] = None): DataFrame =
-    pqTopKFromIndex(spark, resolved(spark, aliasDir, version), queries,
-      idCol, vecCol, k, nProbe, beforeBatch)
-
-  /** [[pqFilteredTopKFromIndex]] routed through an alias. */
-  def pqFilteredTopKFromAlias(
-      spark: SparkSession, aliasDir: String, queries: DataFrame,
-      idCol: String, vecCol: String, allowedIds: DataFrame, k: Int,
-      nProbe: Int = 1, minCandidates: Long = 0L,
-      beforeBatch: Long = Long.MaxValue,
-      excludeIds: Option[DataFrame] = None,
-      version: Option[Long] = None): DataFrame =
-    pqFilteredTopKFromIndex(spark, resolved(spark, aliasDir, version),
-      queries, idCol, vecCol, allowedIds, k, nProbe, minCandidates,
-      beforeBatch, excludeIds)
 }

@@ -155,31 +155,6 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("ivfSq8TopK: neighbors come from the query's cell, ranked by quantized distance") {
-    val e = graft.Tables.table(spark, sf001, "embeddings")
-    val q = e.filter(col("vec_id") % 50 === 0)
-    val out = Similarity.ivfSq8TopK(e, q, "vec_id", "embedding", k = 3, nLists = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-
-    val cells = Similarity.ivfAssignCells(e, "vec_id", "embedding", nLists = 8)
-      .select("vec_id", "cell").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    out.foreach { case (qid, _, nid, _) =>
-      assert(cells(nid) == cells(qid), s"neighbor $nid outside query $qid's cell")
-    }
-    // within a query, rank order is by (dist, id) — and the sq8
-    // distance agrees with the flat sq8TopK's kernel on the same pair
-    out.groupBy(_._1).foreach { case (_, rows) =>
-      val sorted = rows.sortBy(_._2)
-      assert(sorted.map(r => (r._4, r._3)).sameElements(
-        sorted.map(r => (r._4, r._3)).sorted), s"ranks not by (dist,id): $sorted")
-    }
-    val flat = Similarity.sq8TopK(e, q, "vec_id", "embedding", k = e.count().toInt)
-      .collect().map(r => ((r.getLong(0), r.getLong(2)), r.getLong(3))).toMap
-    out.foreach { case (qid, _, nid, d) =>
-      assert(flat((qid, nid)) == d, s"ivf-sq8 dist differs from flat sq8 for ($qid,$nid)")
-    }
-  }
-
   test("pqEncode: one code per (id, subspace), codes within the codebook") {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val (mns, mxs) = Similarity.sq8Ranges(e, "embedding")
@@ -218,22 +193,37 @@ class SimilaritySpec extends SparkSpec {
     assert(out.toSeq == again.toSeq)                  // deterministic
   }
 
-  test("ivfPqTopK: neighbors stay in the query's cell, dists agree with flat PQ") {
+  test("ivfSq8TopK/ivfPqTopK: neighbors stay in the query's cell, ranked by " +
+      "(dist, id), dists agree with the flat quantized kernel") {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val q = e.filter(col("vec_id") % 50 === 0)
-    val out = Similarity.ivfPqTopK(e, q, "vec_id", "embedding", k = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(out.nonEmpty)
     val cells = Similarity.ivfAssignCells(e, "vec_id", "embedding", nLists = 8)
       .select("vec_id", "cell").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    out.foreach { case (qid, _, nid, _) =>
-      assert(cells(nid) == cells(qid), s"neighbor $nid outside query $qid's cell")
-    }
-    // the ADC distance is the same number flat PQ computes for the pair
-    val flat = Similarity.pqTopK(e, q, "vec_id", "embedding", k = e.count().toInt)
-      .collect().map(r => ((r.getLong(0), r.getLong(2)), r.getLong(3))).toMap
-    out.foreach { case (qid, _, nid, d) =>
-      assert(flat((qid, nid)) == d, s"ivf-pq dist differs from flat pq for ($qid,$nid)")
+    def quads(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    // (codec, IVF operator, the same kernel over the whole corpus)
+    val table = Seq[(String, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
+      ("sq8", Similarity.ivfSq8TopK(e, q, "vec_id", "embedding", k = 3, nLists = 8),
+        Similarity.sq8TopK(e, q, "vec_id", "embedding", k = e.count().toInt)),
+      ("pq", Similarity.ivfPqTopK(e, q, "vec_id", "embedding", k = 3),
+        Similarity.pqTopK(e, q, "vec_id", "embedding", k = e.count().toInt)))
+    for ((name, ivf, flatKernel) <- table) {
+      val out = quads(ivf)
+      assert(out.nonEmpty, name)
+      out.foreach { case (qid, _, nid, _) =>
+        assert(cells(nid) == cells(qid), s"$name: neighbor $nid outside query $qid's cell")
+      }
+      // within a query, rank order is by (dist, id)
+      out.groupBy(_._1).foreach { case (_, rows) =>
+        val sorted = rows.sortBy(_._2)
+        assert(sorted.map(r => (r._4, r._3)).sameElements(
+          sorted.map(r => (r._4, r._3)).sorted), s"$name ranks not by (dist,id): $sorted")
+      }
+      // the IVF distance is the same number the flat kernel computes
+      val flat = quads(flatKernel).map(r => (r._1, r._3) -> r._4).toMap
+      out.foreach { case (qid, _, nid, d) =>
+        assert(flat((qid, nid)) == d, s"ivf-$name dist differs from flat $name for ($qid,$nid)")
+      }
     }
   }
 
@@ -262,28 +252,27 @@ class SimilaritySpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(2))).toSet
 
-    // SQ8: nProbe=1 must be exactly the single-probe operator (shared
-    // tie-break contract between assignWith and probeCells rank 1)
-    val sq8Single = pairs(Similarity.ivfSq8TopK(e, q, "vec_id", "embedding", k = 3, nLists = 8))
-    val sq8Probe1 = pairs(Similarity.ivfSq8TopK(e, q, "vec_id", "embedding", k = 3, nLists = 8, nProbe = 1))
-    assert(sq8Single == sq8Probe1)
-    // recall vs the SQ8 brute-force ranking never drops with more probes
-    val sq8Flat = pairs(Similarity.sq8TopK(e, q, "vec_id", "embedding", k = 3))
-    val sq8Multi = pairs(Similarity.ivfSq8TopK(e, q, "vec_id", "embedding", k = 3, nLists = 8, nProbe = 2))
-    assert((sq8Flat & sq8Multi).size >= (sq8Flat & sq8Single).size)
-    // probing every cell degenerates to the flat SQ8 ranking
-    val sq8All = pairs(Similarity.ivfSq8TopK(e, q, "vec_id", "embedding", k = 3, nLists = 8, nProbe = 8))
-    assert(sq8All == sq8Flat)
-
-    // PQ: same three contracts against the flat ADC ranking
-    val pqSingle = pairs(Similarity.ivfPqTopK(e, q, "vec_id", "embedding", k = 3))
-    val pqProbe1 = pairs(Similarity.ivfPqTopK(e, q, "vec_id", "embedding", k = 3, nProbe = 1))
-    assert(pqSingle == pqProbe1)
-    val pqFlat = pairs(Similarity.pqTopK(e, q, "vec_id", "embedding", k = 3))
-    val pqMulti = pairs(Similarity.ivfPqTopK(e, q, "vec_id", "embedding", k = 3, nProbe = 2))
-    assert((pqFlat & pqMulti).size >= (pqFlat & pqSingle).size)
-    val pqAll = pairs(Similarity.ivfPqTopK(e, q, "vec_id", "embedding", k = 3, nProbe = 8))
-    assert(pqAll == pqFlat)
+    // (codec, IVF operator at nProbe (None = its default), flat ranking)
+    val table = Seq[(String, Option[Int] => org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame)](
+      ("sq8", np => np.fold(Similarity.ivfSq8TopK(e, q, "vec_id", "embedding",
+          k = 3, nLists = 8))(n => Similarity.ivfSq8TopK(e, q, "vec_id", "embedding",
+          k = 3, nLists = 8, nProbe = n)),
+        Similarity.sq8TopK(e, q, "vec_id", "embedding", k = 3)),
+      ("pq", np => np.fold(Similarity.ivfPqTopK(e, q, "vec_id", "embedding", k = 3))(
+          n => Similarity.ivfPqTopK(e, q, "vec_id", "embedding", k = 3, nProbe = n)),
+        Similarity.pqTopK(e, q, "vec_id", "embedding", k = 3)))
+    for ((name, ivf, flatRanking) <- table) {
+      // nProbe=1 must be exactly the single-probe operator (shared
+      // tie-break contract between assignWith and probeCells rank 1)
+      val single = pairs(ivf(None))
+      assert(single == pairs(ivf(Some(1))), name)
+      // recall vs the flat ranking never drops with more probes
+      val flat = pairs(flatRanking)
+      assert((flat & pairs(ivf(Some(2)))).size >= (flat & single).size, name)
+      // probing every cell degenerates to the flat ranking
+      assert(pairs(ivf(Some(8))) == flat, name)
+    }
   }
 
   test("recallReport: exact-vs-exact is all 1.0, all-cells probe reaches 1.0, counts add up") {
@@ -430,7 +419,7 @@ class SimilaritySpec extends SparkSpec {
     val q = e.filter(col("vec_id") % 50 === 0)
     val dir = java.nio.file.Files.createTempDirectory("pq_refine_idx").toString
     graft.sinks.CorpusSink.writePqRefineIndex(
-      e, "vec_id", "embedding", s"$dir/index", m = 8, dim = 64, kCent = 16)
+      e, "vec_id", "embedding", s"$dir/index", m = 8, kCent = 16)
 
     // materialize the query batch locally so the plan assert below
     // isolates the CORPUS: the only file reads left must be artifacts

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.similarity.VectorCodec
 
 /** The layout CONTRACT a downstream reader depends on: directory
   * pruning, file caps, shuffle-free bucketed joins, cell-pruned ANN
@@ -78,7 +79,7 @@ class CorpusSinkSpec extends SparkSpec {
     val sim = graft.similarity.Similarity
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val out = tmp("ivf_pq_index")
-    CorpusSink.writeIvfPqIndex(e, "vec_id", "embedding", out)
+    CorpusSink.writeIvfIndex(e, "vec_id", "embedding", out, codec = VectorCodec.Pq())
     assert(Seq("codes", "centroids", "codebook", "ranges")
       .forall(d => new java.io.File(s"$out/$d").isDirectory))
     val cellDirs = new java.io.File(s"$out/codes").listFiles()
@@ -95,7 +96,7 @@ class CorpusSinkSpec extends SparkSpec {
       .as[(Long, Array[Float])].collect().toSeq
       .toDF("vec_id", "embedding")
 
-    val served = sim.ivfPqTopKFromIndex(spark, out, qLocal, "vec_id", "embedding", k = 3)
+    val served = sim.ivfTopKFromIndex(spark, out, qLocal, "vec_id", "embedding", k = 3)
     val plan = served.queryExecution.executedPlan.toString
     assert(!plan.contains("embeddings.parquet"), plan)
     assert(plan.contains("PartitionFilters: [cell"), plan)
@@ -109,27 +110,19 @@ class CorpusSinkSpec extends SparkSpec {
     assert(got == inline)
 
     // multi-probe rides the same written layout
-    val servedMp = sim.ivfPqTopKFromIndex(
+    val servedMp = sim.ivfTopKFromIndex(
         spark, out, qLocal, "vec_id", "embedding", k = 3, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val inlineMp = sim.ivfPqTopK(e, q, "vec_id", "embedding", k = 3, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(servedMp == inlineMp)
-
-    // probing with the wrong quantization parameters fails loudly via
-    // the meta header instead of returning garbage distances
-    val ex = intercept[IllegalArgumentException] {
-      sim.ivfPqTopKFromIndex(spark, out, qLocal, "vec_id", "embedding",
-        k = 3, m = 4, dim = 64)
-    }
-    assert(ex.getMessage.contains("quantization parameters must match"), ex.getMessage)
   }
 
   test("writeIvfFlatIndex + ivfFlatTopKFromIndex: q51's ranking, probed dirs only") {
     val sim = graft.similarity.Similarity
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val out = tmp("ivf_flat_index")
-    CorpusSink.writeIvfFlatIndex(e, "vec_id", "embedding", out)
+    CorpusSink.writeIvfIndex(e, "vec_id", "embedding", out)
     val cellDirs = new java.io.File(s"$out/cells").listFiles()
       .filter(_.isDirectory).map(_.getName)
     assert(cellDirs.nonEmpty && cellDirs.forall(_.startsWith("cell=")))
@@ -141,7 +134,7 @@ class CorpusSinkSpec extends SparkSpec {
       .as[(Long, Array[Float])].collect().toSeq
       .toDF("vec_id", "embedding")
 
-    val served = sim.ivfFlatTopKFromIndex(spark, out, qLocal, "vec_id", "embedding", k = 3)
+    val served = sim.ivfTopKFromIndex(spark, out, qLocal, "vec_id", "embedding", k = 3)
     val plan = served.queryExecution.executedPlan.toString
     assert(!plan.contains("embeddings.parquet"), plan)
     assert(plan.contains("PartitionFilters: [cell"), plan)
@@ -152,7 +145,7 @@ class CorpusSinkSpec extends SparkSpec {
     val got = served.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == inline)
 
-    val servedMp = sim.ivfFlatTopKFromIndex(
+    val servedMp = sim.ivfTopKFromIndex(
         spark, out, qLocal, "vec_id", "embedding", k = 3, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val inlineMp = sim.ivfMultiProbeTopK(e, q, "vec_id", "embedding",
@@ -165,7 +158,7 @@ class CorpusSinkSpec extends SparkSpec {
     val sim = graft.similarity.Similarity
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val out = tmp("ivf_sq8_index")
-    CorpusSink.writeIvfSq8Index(e, "vec_id", "embedding", out)
+    CorpusSink.writeIvfIndex(e, "vec_id", "embedding", out, codec = VectorCodec.Sq8)
     val cellDirs = new java.io.File(s"$out/cells").listFiles()
       .filter(_.isDirectory).map(_.getName)
     assert(cellDirs.nonEmpty && cellDirs.forall(_.startsWith("cell=")))
@@ -177,7 +170,7 @@ class CorpusSinkSpec extends SparkSpec {
       .as[(Long, Array[Float])].collect().toSeq
       .toDF("vec_id", "embedding")
 
-    val served = sim.ivfSq8TopKFromIndex(spark, out, qLocal, "vec_id", "embedding", k = 3)
+    val served = sim.ivfTopKFromIndex(spark, out, qLocal, "vec_id", "embedding", k = 3)
     val plan = served.queryExecution.executedPlan.toString
     assert(!plan.contains("embeddings.parquet"), plan)
     assert(plan.contains("PartitionFilters: [cell"), plan)
@@ -189,27 +182,20 @@ class CorpusSinkSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(got == inline)
 
-    val servedMp = sim.ivfSq8TopKFromIndex(
+    val servedMp = sim.ivfTopKFromIndex(
         spark, out, qLocal, "vec_id", "embedding", k = 3, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val inlineMp = sim.ivfSq8TopK(e, q, "vec_id", "embedding",
         k = 3, nLists = 8, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(servedMp == inlineMp)
-
-    // the meta header rejects a probe at the wrong quantization width
-    val ex = intercept[IllegalArgumentException] {
-      sim.ivfSq8TopKFromIndex(spark, out, qLocal, "vec_id", "embedding",
-        k = 3, dim = 32)
-    }
-    assert(ex.getMessage.contains("quantization width must match"), ex.getMessage)
   }
 
   test("stored-index recall tuning: recall vs brute force is non-decreasing in nProbe (q98's loop)") {
     val sim = graft.similarity.Similarity
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val out = tmp("ivf_pq_recall")
-    CorpusSink.writeIvfPqIndex(e, "vec_id", "embedding", out)
+    CorpusSink.writeIvfIndex(e, "vec_id", "embedding", out, codec = VectorCodec.Pq())
     val q = e.filter(col("vec_id") % 50 === 0)
     val exact = sim.bruteForceTopK(e, q, "vec_id", "embedding", k = 3)
       .persist()
@@ -218,7 +204,7 @@ class CorpusSinkSpec extends SparkSpec {
       // nProbe over the SAME written artifacts, recall must not drop
       val recallAt = (nProbe: Int) => {
         val rep = sim.recallReport(exact,
-          sim.ivfPqTopKFromIndex(spark, out, q, "vec_id", "embedding",
+          sim.ivfTopKFromIndex(spark, out, q, "vec_id", "embedding",
             k = 3, nProbe = nProbe))
           .agg(sum("n_hit").cast("double") / sum("n_exact")).collect()(0).getDouble(0)
         rep

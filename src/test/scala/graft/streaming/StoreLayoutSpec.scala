@@ -80,7 +80,7 @@ class StoreLayoutSpec extends SparkSpec {
     val path = tmp("layout-sink")
     val corpus = (0L until 32L).map(i =>
       (i, Array.fill(4)(((i % 5) + 1).toFloat))).toDF("id", "vec")
-    graft.sinks.CorpusSink.writeIvfFlatIndex(corpus, "id", "vec", path, nLists = 2)
+    graft.sinks.CorpusSink.writeIvfIndex(corpus, "id", "vec", path, nLists = 2)
     val meta = spark.read.parquet(s"$path/meta")
     assert(meta.columns.contains("layout_version"))
     // doctor to a future generation: the probe must refuse at open
@@ -88,7 +88,7 @@ class StoreLayoutSpec extends SparkSpec {
       .withColumn("layout_version", lit(3L)).coalesce(1)
       .write.mode("overwrite").parquet(s"$path/meta")
     val e = intercept[IllegalStateException] {
-      graft.similarity.Similarity.ivfFlatTopKFromIndex(
+      graft.similarity.Similarity.ivfTopKFromIndex(
         spark, path, corpus.limit(2), "id", "vec", k = 3)
     }
     assert(e.getMessage.contains("store-layout version 3"), e.getMessage)

@@ -5,12 +5,24 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSpec
-import graft.similarity.Similarity
+import graft.similarity.{Similarity, VectorCodec}
 
 class VectorIndexStreamSpec extends SparkSpec {
 
   private def topk(df: DataFrame): Set[(Long, Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+
+  /** Every payload codec a store can be seeded with. */
+  private val codecs = Seq(VectorCodec.Flat, VectorCodec.Sq8, VectorCodec.Pq())
+
+  /** A served top-k as a set of whole rows (the quantized codecs carry
+    * their integer `dist` as a fourth column). */
+  private def rows(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
+
+  /** A served top-k as whole rows in (query_id, rank) order. */
+  private def ordered(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).toSeq
+      .sortBy(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long]))
 
   test("seed-only index answers exactly the inline deterministic IVF (q51's ranking)") {
     val e = graft.Tables.table(spark, sf001, "embeddings")
@@ -104,72 +116,78 @@ class VectorIndexStreamSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val e = graft.Tables.table(spark, sf001, "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("vec_index_stream").toString
-
     val seedHalf = e.filter(col("vec_id") % 2 === 0)
-    VectorIndexStream.seedIndex(seedHalf, "vec_id", "embedding", s"$dir/index", nLists = 8)
-
     val odd = e.filter(col("vec_id") % 2 === 1)
       .select("vec_id", "embedding")
       .as[(Long, Array[Float])].collect().toSeq
     val (b0, b1) = odd.partition(_._1 % 4 == 1)
-
-    val in = MemoryStream[(Long, Array[Float])]
-    val q = VectorIndexStream.indexStreamTo(
-      in.toDF().toDF("vec_id", "embedding"),
-      "vec_id", "embedding", s"$dir/index", s"$dir/ckpt")().start()
-    try {
-      in.addData(b0: _*); q.processAllAvailable()
-      in.addData(b1: _*); q.processAllAvailable()
-    } finally q.stop()
-
     val queries = e.filter(col("vec_id") % 50 === 0)
       .select("vec_id", "embedding")
       .as[(Long, Array[Float])].collect().toSeq
       .toDF("vec_id", "embedding")
 
-    // twin: same seed, all streamed rows as ONE backfill batch — batch
-    // boundaries must not affect what the index serves
-    val twinDir = java.nio.file.Files.createTempDirectory("vec_index_twin").toString
-    VectorIndexStream.seedIndex(seedHalf, "vec_id", "embedding", s"$twinDir/index", nLists = 8)
-    VectorIndexStream.appendBatch(
-      odd.toDF("vec_id", "embedding"), "vec_id", "embedding", s"$twinDir/index", 0L)
+    for (codec <- codecs) {
+      def seeded(dir: String): String = {
+        VectorIndexStream.seedIndex(seedHalf, "vec_id", "embedding", s"$dir/index",
+          nLists = 8, codec = codec)
+        s"$dir/index"
+      }
+      def tmp(name: String) = java.nio.file.Files.createTempDirectory(name).toString
+      def served(idx: String, beforeBatch: Long = Long.MaxValue) =
+        rows(VectorIndexStream.topKFromIndex(spark, idx, queries, "vec_id",
+          "embedding", k = 3, beforeBatch = beforeBatch))
 
-    val full = topk(VectorIndexStream.topKFromIndex(
-      spark, s"$dir/index", queries, "vec_id", "embedding", k = 3))
-    val twin = topk(VectorIndexStream.topKFromIndex(
-      spark, s"$twinDir/index", queries, "vec_id", "embedding", k = 3))
-    assert(full == twin)
-    assert(full.nonEmpty)
+      val dir = tmp("vec_index_stream")
+      val idx = seeded(dir)
+      val in = MemoryStream[(Long, Array[Float])]
+      val q = VectorIndexStream.indexStreamTo(
+        in.toDF().toDF("vec_id", "embedding"),
+        "vec_id", "embedding", idx, s"$dir/ckpt")().start()
+      try {
+        in.addData(b0: _*); q.processAllAvailable()
+        in.addData(b1: _*); q.processAllAvailable()
+      } finally q.stop()
 
-    // fence: beforeBatch = 0 sees only the seed
-    val seedOnlyDir = java.nio.file.Files.createTempDirectory("vec_index_seedonly").toString
-    VectorIndexStream.seedIndex(seedHalf, "vec_id", "embedding", s"$seedOnlyDir/index", nLists = 8)
-    val fenced = topk(VectorIndexStream.topKFromIndex(
-      spark, s"$dir/index", queries, "vec_id", "embedding", k = 3, beforeBatch = 0))
-    val seedOnly = topk(VectorIndexStream.topKFromIndex(
-      spark, s"$seedOnlyDir/index", queries, "vec_id", "embedding", k = 3))
-    assert(fenced == seedOnly)
-    assert(fenced != full) // streamed vectors genuinely changed answers
+      // stored artifacts only, statically pruned to the probed cells
+      // (the batch fence rides in PartitionFilters too)
+      val plan = VectorIndexStream.topKFromIndex(spark, idx, queries,
+        "vec_id", "embedding", k = 3).queryExecution.executedPlan.toString
+      assert(!plan.contains("embeddings.parquet"), s"$codec: $plan")
+      assert("PartitionFilters: \\[[^\\]]*cell[^\\]]* IN \\(".r
+        .findFirstIn(plan).isDefined, s"$codec: $plan")
 
-    // replay: re-appending batch 1's rows AS batch 1 overwrites in place
-    VectorIndexStream.appendBatch(
-      b1.toDF("vec_id", "embedding"), "vec_id", "embedding", s"$dir/index", 1L)
-    assert(topk(VectorIndexStream.topKFromIndex(
-      spark, s"$dir/index", queries, "vec_id", "embedding", k = 3)) == full)
+      // twin: same seed, all streamed rows as ONE backfill batch — batch
+      // boundaries must not affect what the index serves
+      val full = served(idx)
+      val twin = seeded(tmp("vec_index_twin"))
+      VectorIndexStream.appendBatch(
+        odd.toDF("vec_id", "embedding"), "vec_id", "embedding", twin, 0L)
+      assert(full == served(twin), codec)
+      assert(full.nonEmpty, codec)
 
-    // compaction folds old batches into the seed without changing what
-    // any future fence reads; folding the NEWEST batch is refused
-    val ex = intercept[IllegalArgumentException] {
-      VectorIndexStream.compactIndex(spark, s"$dir/index", throughBatch = 1)
+      // fence: beforeBatch = 0 sees only the seed
+      val fenced = served(idx, beforeBatch = 0)
+      assert(fenced == served(seeded(tmp("vec_index_seedonly"))), codec)
+      assert(fenced != full, codec) // streamed vectors genuinely changed answers
+
+      // replay: re-appending batch 1's rows AS batch 1 overwrites in place
+      VectorIndexStream.appendBatch(
+        b1.toDF("vec_id", "embedding"), "vec_id", "embedding", idx, 1L)
+      assert(served(idx) == full, codec)
+
+      // compaction folds old batches into the seed without changing what
+      // any future fence reads, whatever the payload; folding the NEWEST
+      // batch is refused
+      val ex = intercept[IllegalArgumentException] {
+        VectorIndexStream.compactIndex(spark, idx, throughBatch = 1)
+      }
+      assert(ex.getMessage.contains("newest"), ex.getMessage)
+      VectorIndexStream.compactIndex(spark, idx, throughBatch = 0)
+      val batchDirs = new java.io.File(s"$idx/cells").listFiles()
+        .filter(_.isDirectory).map(_.getName).filter(_.startsWith("batch=")).toSet
+      assert(batchDirs == Set("batch=-1", "batch=1"), s"$codec: $batchDirs")
+      assert(served(idx) == full, codec)
     }
-    assert(ex.getMessage.contains("newest"), ex.getMessage)
-    VectorIndexStream.compactIndex(spark, s"$dir/index", throughBatch = 0)
-    val batchDirs = new java.io.File(s"$dir/index/cells").listFiles()
-      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("batch=")).toSet
-    assert(batchDirs == Set("batch=-1", "batch=1"), batchDirs.toString)
-    assert(topk(VectorIndexStream.topKFromIndex(
-      spark, s"$dir/index", queries, "vec_id", "embedding", k = 3)) == full)
   }
 
   test("SQ8 store: streamed quantized cells rank exactly as the pinned-grid fused kernel (q106)") {
@@ -177,15 +195,16 @@ class VectorIndexStreamSpec extends SparkSpec {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("vec_index_sq8").toString
     val evens = e.filter(col("vec_id") % 2 === 0)
-    VectorIndexStream.seedSq8Index(evens, "vec_id", "embedding", s"$dir/index", nLists = 8)
-    VectorIndexStream.appendSq8Batch(
+    VectorIndexStream.seedIndex(evens, "vec_id", "embedding", s"$dir/index", nLists = 8,
+      codec = VectorCodec.Sq8)
+    VectorIndexStream.appendBatch(
       e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", s"$dir/index", 0L)
 
     val qLocal = e.filter(col("vec_id") % 50 === 0)
       .select("vec_id", "embedding")
       .as[(Long, Array[Float])].collect().toSeq
       .toDF("vec_id", "embedding")
-    val served = VectorIndexStream.sq8TopKFromIndex(
+    val served = VectorIndexStream.topKFromIndex(
       spark, s"$dir/index", qLocal, "vec_id", "embedding", k = 3)
     val plan = served.queryExecution.executedPlan.toString
     assert(!plan.contains("embeddings.parquet"), plan)
@@ -218,112 +237,13 @@ class VectorIndexStreamSpec extends SparkSpec {
     assert(quad(served).nonEmpty)
   }
 
-  test("SQ8 store lifecycle: streamed batches == one-batch backfill; compaction preserves answers") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val e = graft.Tables.table(spark, sf001, "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("vec_index_sq8_stream").toString
-    val evens = e.filter(col("vec_id") % 2 === 0)
-    VectorIndexStream.seedSq8Index(evens, "vec_id", "embedding", s"$dir/index", nLists = 8)
-
-    val odd = e.filter(col("vec_id") % 2 === 1)
-      .select("vec_id", "embedding")
-      .as[(Long, Array[Float])].collect().toSeq
-    val (b0, b1) = odd.partition(_._1 % 4 == 1)
-    val in = MemoryStream[(Long, Array[Float])]
-    val q = VectorIndexStream.sq8IndexStreamTo(
-      in.toDF().toDF("vec_id", "embedding"),
-      "vec_id", "embedding", s"$dir/index", s"$dir/ckpt")().start()
-    try {
-      in.addData(b0: _*); q.processAllAvailable()
-      in.addData(b1: _*); q.processAllAvailable()
-    } finally q.stop()
-
-    val queries = e.filter(col("vec_id") % 50 === 0)
-      .select("vec_id", "embedding")
-      .as[(Long, Array[Float])].collect().toSeq
-      .toDF("vec_id", "embedding")
-    def quad(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val streamed = quad(VectorIndexStream.sq8TopKFromIndex(
-      spark, s"$dir/index", queries, "vec_id", "embedding", k = 3))
-
-    val twinDir = java.nio.file.Files.createTempDirectory("vec_index_sq8_twin").toString
-    VectorIndexStream.seedSq8Index(evens, "vec_id", "embedding", s"$twinDir/index", nLists = 8)
-    VectorIndexStream.appendSq8Batch(
-      odd.toDF("vec_id", "embedding"), "vec_id", "embedding", s"$twinDir/index", 0L)
-    assert(streamed == quad(VectorIndexStream.sq8TopKFromIndex(
-      spark, s"$twinDir/index", queries, "vec_id", "embedding", k = 3)))
-    assert(streamed.nonEmpty)
-
-    // the payload-agnostic compaction folds quantized batches too
-    VectorIndexStream.compactIndex(spark, s"$dir/index", throughBatch = 0)
-    val dirs = new java.io.File(s"$dir/index/cells").listFiles()
-      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("batch=")).toSet
-    assert(dirs == Set("batch=-1", "batch=1"), dirs.toString)
-    assert(quad(VectorIndexStream.sq8TopKFromIndex(
-      spark, s"$dir/index", queries, "vec_id", "embedding", k = 3)) == streamed)
-  }
-
-  test("PQ store: streamed code cells == one-batch backfill; pruned plan; fence works (q107)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val e = graft.Tables.table(spark, sf001, "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("vec_index_pq_stream").toString
-    val evens = e.filter(col("vec_id") % 2 === 0)
-    VectorIndexStream.seedPqIndex(evens, "vec_id", "embedding", s"$dir/index")
-
-    val odd = e.filter(col("vec_id") % 2 === 1)
-      .select("vec_id", "embedding")
-      .as[(Long, Array[Float])].collect().toSeq
-    val (b0, b1) = odd.partition(_._1 % 4 == 1)
-    val in = MemoryStream[(Long, Array[Float])]
-    val q = VectorIndexStream.pqIndexStreamTo(
-      in.toDF().toDF("vec_id", "embedding"),
-      "vec_id", "embedding", s"$dir/index", s"$dir/ckpt")().start()
-    try {
-      in.addData(b0: _*); q.processAllAvailable()
-      in.addData(b1: _*); q.processAllAvailable()
-    } finally q.stop()
-
-    val queries = e.filter(col("vec_id") % 50 === 0)
-      .select("vec_id", "embedding")
-      .as[(Long, Array[Float])].collect().toSeq
-      .toDF("vec_id", "embedding")
-    def quad(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val served = VectorIndexStream.pqTopKFromIndex(
-      spark, s"$dir/index", queries, "vec_id", "embedding", k = 3)
-    val plan = served.queryExecution.executedPlan.toString
-    assert(!plan.contains("embeddings.parquet"), plan)
-    assert("PartitionFilters: \\[[^\\]]*cell[^\\]]* IN \\(".r
-      .findFirstIn(plan).isDefined, plan)
-    val streamed = quad(served)
-    assert(streamed.nonEmpty)
-
-    val twinDir = java.nio.file.Files.createTempDirectory("vec_index_pq_twin").toString
-    VectorIndexStream.seedPqIndex(evens, "vec_id", "embedding", s"$twinDir/index")
-    VectorIndexStream.appendPqBatch(
-      odd.toDF("vec_id", "embedding"), "vec_id", "embedding", s"$twinDir/index", 0L)
-    assert(streamed == quad(VectorIndexStream.pqTopKFromIndex(
-      spark, s"$twinDir/index", queries, "vec_id", "embedding", k = 3)))
-
-    // fence: pre-stream state == a seed-only store
-    val seedOnly = java.nio.file.Files.createTempDirectory("vec_index_pq_seed").toString
-    VectorIndexStream.seedPqIndex(evens, "vec_id", "embedding", s"$seedOnly/index")
-    assert(quad(VectorIndexStream.pqTopKFromIndex(
-        spark, s"$dir/index", queries, "vec_id", "embedding", k = 3, beforeBatch = 0))
-      == quad(VectorIndexStream.pqTopKFromIndex(
-        spark, s"$seedOnly/index", queries, "vec_id", "embedding", k = 3)))
-  }
-
   test("PQ+refine over streamed stores: stream == backfill; id-pruned refine; full-probe full-rerank == brute force (q123)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("vec_index_refine").toString
     val evens = e.filter(col("vec_id") % 2 === 0)
-    VectorIndexStream.seedPqIndex(evens, "vec_id", "embedding", s"$dir/pq")
+    VectorIndexStream.seedIndex(evens, "vec_id", "embedding", s"$dir/pq", codec = VectorCodec.Pq())
     VectorIndexStream.seedIndex(evens, "vec_id", "embedding", s"$dir/vecs")
 
     // both stores fed from ONE logical stream in two micro-batches
@@ -333,7 +253,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     val (b0, b1) = odd.partition(_._1 % 4 == 1)
     val inPq = MemoryStream[(Long, Array[Float])]
     val inFlat = MemoryStream[(Long, Array[Float])]
-    val qPq = VectorIndexStream.pqIndexStreamTo(
+    val qPq = VectorIndexStream.indexStreamTo(
       inPq.toDF().toDF("vec_id", "embedding"),
       "vec_id", "embedding", s"$dir/pq", s"$dir/ckpt_pq")().start()
     val qFlat = VectorIndexStream.indexStreamTo(
@@ -365,8 +285,8 @@ class VectorIndexStreamSpec extends SparkSpec {
 
     // == the one-batch backfill twin of BOTH stores
     val twin = java.nio.file.Files.createTempDirectory("vec_index_refine_twin").toString
-    VectorIndexStream.seedPqIndex(evens, "vec_id", "embedding", s"$twin/pq")
-    VectorIndexStream.appendPqBatch(
+    VectorIndexStream.seedIndex(evens, "vec_id", "embedding", s"$twin/pq", codec = VectorCodec.Pq())
+    VectorIndexStream.appendBatch(
       odd.toDF("vec_id", "embedding"), "vec_id", "embedding", s"$twin/pq", 0L)
     VectorIndexStream.seedIndex(evens, "vec_id", "embedding", s"$twin/vecs")
     VectorIndexStream.appendBatch(
@@ -387,7 +307,8 @@ class VectorIndexStreamSpec extends SparkSpec {
 
     // fence pins BOTH stores: pre-stream == seed-only twins
     val seedOnly = java.nio.file.Files.createTempDirectory("vec_index_refine_seed").toString
-    VectorIndexStream.seedPqIndex(evens, "vec_id", "embedding", s"$seedOnly/pq")
+    VectorIndexStream.seedIndex(evens, "vec_id", "embedding", s"$seedOnly/pq",
+      codec = VectorCodec.Pq())
     VectorIndexStream.seedIndex(evens, "vec_id", "embedding", s"$seedOnly/vecs")
     assert(topk(VectorIndexStream.pqRefinedTopKFromIndex(
         spark, s"$dir/pq", s"$dir/vecs", queries, "vec_id", "embedding",
@@ -489,13 +410,12 @@ class VectorIndexStreamSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("vec_recall").toString
     val even = e.filter(col("vec_id") % 2 === 0)
     val odd = e.filter(col("vec_id") % 2 === 1)
-    VectorIndexStream.seedIndex(even, "vec_id", "embedding", s"$dir/flat", nLists = 8)
-    VectorIndexStream.appendBatch(odd, "vec_id", "embedding", s"$dir/flat", 0L)
-    VectorIndexStream.seedSq8Index(even, "vec_id", "embedding", s"$dir/sq8", nLists = 8)
-    VectorIndexStream.appendSq8Batch(odd, "vec_id", "embedding", s"$dir/sq8", 0L)
-    VectorIndexStream.seedPqIndex(even, "vec_id", "embedding", s"$dir/pq",
-      nLists = 8, m = 8, dim = 64, kCent = 16)
-    VectorIndexStream.appendPqBatch(odd, "vec_id", "embedding", s"$dir/pq", 0L)
+    def store(codec: VectorCodec) = s"$dir/store${codecs.indexOf(codec)}"
+    codecs.foreach { codec =>
+      VectorIndexStream.seedIndex(even, "vec_id", "embedding", store(codec),
+        nLists = 8, codec = codec)
+      VectorIndexStream.appendBatch(odd, "vec_id", "embedding", store(codec), 0L)
+    }
 
     val q = e.filter(col("vec_id") % 50 === 0)
     val exact = sim.bruteForceTopK(e, q, "vec_id", "embedding", k = 3).persist()
@@ -504,25 +424,20 @@ class VectorIndexStreamSpec extends SparkSpec {
         sim.recallReport(exact, approx)
           .agg(sum("n_hit").cast("double") / sum("n_exact"))
           .collect()(0).getDouble(0)
+      def at(codec: VectorCodec, np: Int) = recallOf(VectorIndexStream.topKFromIndex(
+        spark, store(codec), q, "vec_id", "embedding", k = 3, nProbe = np))
       // q109's tuning loop on the streamed matrix: widen nProbe over
       // the SAME stored partitions, recall must not drop — for every
-      // payload variant, not just the flat one
-      val probes = Seq[(String, Int => org.apache.spark.sql.DataFrame)](
-        "flat" -> (np => VectorIndexStream.topKFromIndex(
-          spark, s"$dir/flat", q, "vec_id", "embedding", k = 3, nProbe = np)),
-        "sq8" -> (np => VectorIndexStream.sq8TopKFromIndex(
-          spark, s"$dir/sq8", q, "vec_id", "embedding", k = 3, nProbe = np)),
-        "pq" -> (np => VectorIndexStream.pqTopKFromIndex(
-          spark, s"$dir/pq", q, "vec_id", "embedding", k = 3, nProbe = np)))
-      probes.foreach { case (name, at) =>
-        val r1 = recallOf(at(1)); val r2 = recallOf(at(2)); val r8 = recallOf(at(8))
-        assert(r1 <= r2 && r2 <= r8, s"$name recall not monotone: $r1, $r2, $r8")
-        assert(r8 > 0.0, name)
+      // payload codec, not just the flat one
+      codecs.foreach { codec =>
+        val r1 = at(codec, 1); val r2 = at(codec, 2); val r8 = at(codec, 8)
+        assert(r1 <= r2 && r2 <= r8, s"$codec recall not monotone: $r1, $r2, $r8")
+        assert(r8 > 0.0, codec)
       }
       // probing every cell of the FLAT store is brute force restricted
       // to nothing — exact cosine over all vectors, recall 1.0 (the
       // quantized stores keep their documented compression loss)
-      assert(recallOf(probes.head._2(8)) == 1.0)
+      assert(at(VectorCodec.Flat, 8) == 1.0)
     } finally exact.unpersist()
   }
 
@@ -533,68 +448,46 @@ class VectorIndexStreamSpec extends SparkSpec {
     val v = evens.orderBy(col("vec_id")).limit(1)
       .select("embedding").as[Array[Float]].collect()(0)
     val qdf = Seq((1L, v)).toDF("vec_id", "embedding")
-
-    // FLAT: id 7777 written in batch 0 as v (cos 1 vs the query), then
-    // REWRITTEN in batch 1 as -v (cos -1). Latest-batch-wins: the probe
-    // must rank 7777 by the batch-1 vector and emit it at most once —
-    // without the resolution it would surface twice, once at rank 1.
-    val dir = java.nio.file.Files.createTempDirectory("vec_reuse_flat").toString
-    VectorIndexStream.seedIndex(evens, "vec_id", "embedding", s"$dir/index", nLists = 8)
-    VectorIndexStream.appendBatch(
-      Seq((7777L, v)).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", s"$dir/index", 0L)
-    VectorIndexStream.appendBatch(
-      Seq((7777L, v.map(x => -x))).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", s"$dir/index", 1L)
-    // probe ALL cells so the scan covers both copies (the resolution is
+    def store(name: String, codec: VectorCodec, batches: Array[Float]*): String = {
+      val idx = java.nio.file.Files.createTempDirectory(name).toString + "/index"
+      VectorIndexStream.seedIndex(evens, "vec_id", "embedding", idx,
+        nLists = 8, codec = codec)
+      batches.zipWithIndex.foreach { case (vec, b) =>
+        VectorIndexStream.appendBatch(Seq((7777L, vec)).toDF("vec_id", "embedding"),
+          "vec_id", "embedding", idx, b.toLong)
+      }
+      idx
+    }
+    // probe ALL cells so the scan covers every copy (the resolution is
     // per-scan: a stale copy in an UNPROBED cell stays invisible there,
     // the documented Faiss-like limitation — updating a moved vector
     // needs expiry/compaction, not blind re-append)
-    val flat = VectorIndexStream.topKFromIndex(
-        spark, s"$dir/index", qdf, "vec_id", "embedding", k = 1000, nProbe = 8)
-      .collect().map(r => (r.getLong(1), r.getLong(2)))
-    assert(flat.count(_._2 == 7777L) == 1, flat.mkString(","))
-    // without latest-wins the batch-0 copy (cos exactly 1) would sit at
-    // rank 1; the batch-1 vector is -v (cos -1), so 7777 must rank LAST
-    assert(flat.maxBy(_._1)._2 == 7777L, flat.mkString(","))
-    assert(flat.minBy(_._1)._2 != 7777L, flat.mkString(","))
+    def served(idx: String, beforeBatch: Long = Long.MaxValue): Array[org.apache.spark.sql.Row] =
+      VectorIndexStream.topKFromIndex(spark, idx, qdf, "vec_id", "embedding",
+        k = 1000, nProbe = 8, beforeBatch = beforeBatch).collect()
 
-    // PQ: same id appended in two batches with the SAME vector — the
-    // ADC sum must not double (the silently-wrong-distance bug): the
-    // distance equals the one served by a store holding the id once.
-    val d1 = java.nio.file.Files.createTempDirectory("vec_reuse_pq1").toString
-    val d2 = java.nio.file.Files.createTempDirectory("vec_reuse_pq2").toString
-    for (d <- Seq(d1, d2)) {
-      VectorIndexStream.seedPqIndex(evens, "vec_id", "embedding", s"$d/index")
-      VectorIndexStream.appendPqBatch(
-        Seq((7777L, v)).toDF("vec_id", "embedding"),
-        "vec_id", "embedding", s"$d/index", 0L)
+    for (codec <- codecs) {
+      // id 7777 written in batch 0 as v, then REWRITTEN in batch 1 as -v:
+      // the probe must rank the batch-1 payload and emit 7777 at most
+      // once — without the resolution it would surface twice
+      val rewritten = served(store("vec_reuse", codec, v, v.map(x => -x)))
+      assert(rewritten.count(_.getLong(2) == 7777L) == 1,
+        s"$codec: ${rewritten.mkString(",")}")
+      if (codec == VectorCodec.Flat) {
+        // without latest-wins the batch-0 copy (cos exactly 1) would sit
+        // at rank 1; the batch-1 vector is -v (cos -1), so 7777 ranks LAST
+        val ranked = rewritten.map(r => (r.getLong(1), r.getLong(2)))
+        assert(ranked.maxBy(_._1)._2 == 7777L, ranked.mkString(","))
+        assert(ranked.minBy(_._1)._2 != 7777L, ranked.mkString(","))
+      }
+      // the SAME vector appended in two batches serves exactly as the
+      // store held it once (fenced before the second copy) — no duplicate
+      // row, and (PQ) no ADC sum counted twice, the silently-wrong-
+      // distance bug
+      val dup = store("vec_reuse_dup", codec, v, v)
+      assert(served(dup).map(_.toSeq).toSet ==
+        served(dup, beforeBatch = 1L).map(_.toSeq).toSet, codec)
     }
-    VectorIndexStream.appendPqBatch(
-      Seq((7777L, v)).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", s"$d1/index", 1L)
-    def pqDist(d: String): Map[Long, Long] =
-      VectorIndexStream.pqTopKFromIndex(
-          spark, s"$d/index", qdf, "vec_id", "embedding", k = 1000)
-        .collect().map(r => r.getLong(2) -> r.getLong(3)).toMap
-    val (dup, single) = (pqDist(d1), pqDist(d2))
-    assert(dup.get(7777L) == single.get(7777L),
-      s"${dup.get(7777L)} vs ${single.get(7777L)}")
-    assert(dup == single)
-
-    // SQ8: rewritten vector serves the latest quantized payload
-    val d3 = java.nio.file.Files.createTempDirectory("vec_reuse_sq8").toString
-    VectorIndexStream.seedSq8Index(evens, "vec_id", "embedding", s"$d3/index", nLists = 8)
-    VectorIndexStream.appendSq8Batch(
-      Seq((7777L, v)).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", s"$d3/index", 0L)
-    VectorIndexStream.appendSq8Batch(
-      Seq((7777L, v.map(x => -x))).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", s"$d3/index", 1L)
-    val sq8 = VectorIndexStream.sq8TopKFromIndex(
-        spark, s"$d3/index", qdf, "vec_id", "embedding", k = 1000, nProbe = 8)
-      .collect().map(r => (r.getLong(2), r.getLong(3)))
-    assert(sq8.count(_._1 == 7777L) == 1, sq8.mkString(","))
   }
 
   test("expireIndex: expired vectors leave probe results and semantic-dedup history") {
@@ -727,7 +620,8 @@ class VectorIndexStreamSpec extends SparkSpec {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("vec_index_guards").toString
     val evens = e.filter(col("vec_id") % 2 === 0)
-    VectorIndexStream.seedSq8Index(evens, "vec_id", "embedding", s"$dir/index", nLists = 8)
+    VectorIndexStream.seedIndex(evens, "vec_id", "embedding", s"$dir/index", nLists = 8,
+      codec = VectorCodec.Sq8)
 
     // expiring EVERY partition would brick the store — refused
     val exAll = intercept[IllegalArgumentException] {
@@ -740,7 +634,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     // instead of ranking on a truncated prefix
     val narrow = Seq((1L, Array.fill(32)(0.5f))).toDF("vec_id", "embedding")
     val exW = intercept[Exception] {
-      VectorIndexStream.sq8TopKFromIndex(
+      VectorIndexStream.topKFromIndex(
         spark, s"$dir/index", narrow, "vec_id", "embedding", k = 3).collect()
     }
     def chain(t: Throwable): List[String] = {
@@ -753,9 +647,10 @@ class VectorIndexStreamSpec extends SparkSpec {
 
     // a PQ batch with a duplicated id stores ONE code row for it
     val pqDir = java.nio.file.Files.createTempDirectory("vec_index_pq_dup").toString
-    VectorIndexStream.seedPqIndex(evens, "vec_id", "embedding", s"$pqDir/index")
+    VectorIndexStream.seedIndex(evens, "vec_id", "embedding", s"$pqDir/index",
+      codec = VectorCodec.Pq())
     val v1 = evens.limit(1).select("embedding").as[Array[Float]].collect()(0)
-    VectorIndexStream.appendPqBatch(
+    VectorIndexStream.appendBatch(
       Seq((7777L, v1), (7777L, v1.map(x => -x))).toDF("vec_id", "embedding"),
       "vec_id", "embedding", s"$pqDir/index", 0L)
     val stored = VectorIndexStream.readCells(spark, s"$pqDir/index")
@@ -803,10 +698,10 @@ class VectorIndexStreamSpec extends SparkSpec {
     // fresh store: no tombstone dir, empty live set, probe unchanged
     val emptyTs = VectorIndexStream.liveTombstones(spark, s"$dir/index", "vec_id")
     assert(emptyTs.count() == 0)
-    val before = topk(Similarity.ivfFlatTopKFromIndex(
+    val before = topk(Similarity.ivfTopKFromIndex(
       spark, s"$dir/index", q, "vec_id", "embedding", k = 3,
       excludeIds = Some(emptyTs)))
-    assert(before == topk(Similarity.ivfFlatTopKFromIndex(
+    assert(before == topk(Similarity.ivfTopKFromIndex(
       spark, s"$dir/index", q, "vec_id", "embedding", k = 3)))
 
     // delete every id that appears in the current top-3: each must be
@@ -816,7 +711,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     import spark2.implicits._
     VectorIndexStream.deleteBatch(spark, s"$dir/index",
       hitIds.toDF("vec_id"), "vec_id", batchId = 0L)
-    val after = Similarity.ivfFlatTopKFromIndex(
+    val after = Similarity.ivfTopKFromIndex(
       spark, s"$dir/index", q, "vec_id", "embedding", k = 3,
       excludeIds = Some(
         VectorIndexStream.liveTombstones(spark, s"$dir/index", "vec_id")))
@@ -1090,9 +985,10 @@ class VectorIndexStreamSpec extends SparkSpec {
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", flat, nLists = 8)
     VectorIndexStream.appendBatch(
       e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", flat, 0L)
-    VectorIndexStream.seedSq8Index(
-      e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", sq8, nLists = 8)
-    VectorIndexStream.appendSq8Batch(
+    VectorIndexStream.seedIndex(
+      e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", sq8, nLists = 8,
+      codec = VectorCodec.Sq8)
+    VectorIndexStream.appendBatch(
       e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", sq8, 0L)
     Seq(flat, sq8).foreach { idx =>
       val p = new org.apache.hadoop.fs.Path(s"$idx/cells/batch=-1")
@@ -1323,86 +1219,65 @@ class VectorIndexStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("sq8/pqFilteredTopKFromIndex: allowed=all == unfiltered serve, predicate " +
-      "and deletes respected, auto floor fills top-k, pruning retained") {
+  test("filteredTopKFromIndex on every codec: allowed=all == unfiltered serve, " +
+      "predicate and deletes respected, auto floor fills top-k, pruning retained") {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val q = e.filter(col("vec_id") % 50 === 0)
     val allIds = e.select(col("vec_id"))
     val pred = col("label").isin(2, 4, 6)
     val allowedIds = e.filter(pred).select(col("vec_id"))
     val allowed = allowedIds.collect().map(_.getLong(0)).toSet
-    def top(df: DataFrame): Seq[(Long, Long, Long, Long)] =
-      df.collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-        .sortBy(t => (t._1, t._2))
-
-    val dir = java.nio.file.Files.createTempDirectory("vec_index_qfilt").toString
-    val sq8 = s"$dir/sq8"; val pq = s"$dir/pq"
-    VectorIndexStream.seedSq8Index(
-      e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", sq8, nLists = 8)
-    VectorIndexStream.appendSq8Batch(
-      e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", sq8, 0L)
-    VectorIndexStream.seedPqIndex(
-      e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", pq,
-      nLists = 8, m = 8, dim = 64, kCent = 16)
-    VectorIndexStream.appendPqBatch(
-      e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", pq, 0L)
-
-    // allowed = every id, no excludes -> EXACTLY the unfiltered serve
-    // (the admission pipeline must be a pure restriction, never a
-    // re-ranking), at both nProbe depths
-    for (np <- Seq(1, 2)) {
-      assert(top(VectorIndexStream.sq8FilteredTopKFromIndex(
-        spark, sq8, q, "vec_id", "embedding", allIds, k = 3, nProbe = np)) ==
-        top(VectorIndexStream.sq8TopKFromIndex(
-          spark, sq8, q, "vec_id", "embedding", k = 3, nProbe = np)))
-      assert(top(VectorIndexStream.pqFilteredTopKFromIndex(
-        spark, pq, q, "vec_id", "embedding", allIds, k = 3, nProbe = np)) ==
-        top(VectorIndexStream.pqTopKFromIndex(
-          spark, pq, q, "vec_id", "embedding", k = 3, nProbe = np)))
-    }
-
-    // predicate respected + the probe keeps its static cell pruning
-    val servedSq8 = VectorIndexStream.sq8FilteredTopKFromIndex(
-      spark, sq8, q, "vec_id", "embedding", allowedIds, k = 3, nProbe = 2)
-    assert(servedSq8.collect().forall(r => allowed(r.getLong(2))))
-    assert("PartitionFilters: \\[[^\\]]*cell[^\\]]* IN \\(".r
-      .findFirstIn(servedSq8.queryExecution.executedPlan.toString).isDefined)
-    val servedPq = VectorIndexStream.pqFilteredTopKFromIndex(
-      spark, pq, q, "vec_id", "embedding", allowedIds, k = 3, nProbe = 2)
-    assert(servedPq.collect().forall(r => allowed(r.getLong(2))))
-    assert("PartitionFilters: \\[[^\\]]*cell[^\\]]* IN \\(".r
-      .findFirstIn(servedPq.queryExecution.executedPlan.toString).isDefined)
-
-    // delete composition: a tombstoned id vanishes from the ranking and
-    // the next-best servable code fills the slot (never a short top-k)
-    val victim = servedSq8.collect().map(_.getLong(2)).head
-    val spark2 = spark
-    import spark2.implicits._
-    VectorIndexStream.deleteBatch(spark, sq8,
-      Seq(victim).toDF("vec_id"), "vec_id", batchId = 1L)
-    val afterDel = VectorIndexStream.sq8FilteredTopKFromIndex(
-      spark, sq8, q, "vec_id", "embedding", allowedIds, k = 3, nProbe = 2,
-      excludeIds = Some(VectorIndexStream.deadIds(spark, sq8, "vec_id")))
-    val rows = afterDel.collect()
-    assert(rows.forall(_.getLong(2) != victim))
-    assert(rows.groupBy(_.getLong(0)).values.forall(_.length == 3))
-
-    // auto floor on the quantized stores: every query serves a full
-    // top-3 of allowed candidates under the sharp predicate
     val sharpIds = e.filter(col("label") === 4).select(col("vec_id"))
     val sharpAllowed = sharpIds.collect().map(_.getLong(0)).toSet
-    for (df <- Seq(
-        VectorIndexStream.sq8FilteredTopKFromIndex(
-          spark, sq8, q, "vec_id", "embedding", sharpIds, k = 3,
-          minCandidates = 20L,
-          excludeIds = Some(VectorIndexStream.deadIds(spark, sq8, "vec_id"))),
-        VectorIndexStream.pqFilteredTopKFromIndex(
-          spark, pq, q, "vec_id", "embedding", sharpIds, k = 3,
-          minCandidates = 20L))) {
-      val rs = df.collect()
-      assert(rs.forall(r => sharpAllowed(r.getLong(2))))
-      assert(rs.groupBy(_.getLong(0)).values.forall(_.length == 3))
+    val spark2 = spark
+    import spark2.implicits._
+
+    for (codec <- codecs) {
+      val idx = java.nio.file.Files.createTempDirectory("vec_index_qfilt").toString + "/index"
+      VectorIndexStream.seedIndex(
+        e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
+        nLists = 8, codec = codec)
+      VectorIndexStream.appendBatch(
+        e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
+
+      // allowed = every id, no excludes -> EXACTLY the unfiltered serve
+      // (the admission pipeline must be a pure restriction, never a
+      // re-ranking), at both nProbe depths
+      for (np <- Seq(1, 2)) {
+        assert(ordered(VectorIndexStream.filteredTopKFromIndex(
+          spark, idx, q, "vec_id", "embedding", allIds, k = 3, nProbe = np)) ==
+          ordered(VectorIndexStream.topKFromIndex(
+            spark, idx, q, "vec_id", "embedding", k = 3, nProbe = np)), codec)
+      }
+
+      // predicate respected + the probe keeps its static cell pruning
+      val served = VectorIndexStream.filteredTopKFromIndex(
+        spark, idx, q, "vec_id", "embedding", allowedIds, k = 3, nProbe = 2)
+      assert(served.collect().forall(r => allowed(r.getLong(2))), codec)
+      assert("PartitionFilters: \\[[^\\]]*cell[^\\]]* IN \\(".r
+        .findFirstIn(served.queryExecution.executedPlan.toString).isDefined, codec)
+
+      // delete composition: a tombstoned id vanishes from the ranking and
+      // the next-best servable payload fills the slot (never a short top-k)
+      val victim = served.collect().map(_.getLong(2)).head
+      VectorIndexStream.deleteBatch(spark, idx,
+        Seq(victim).toDF("vec_id"), "vec_id", batchId = 1L)
+      val dead = Some(VectorIndexStream.deadIds(spark, idx, "vec_id"))
+      val afterDel = VectorIndexStream.filteredTopKFromIndex(
+        spark, idx, q, "vec_id", "embedding", allowedIds, k = 3, nProbe = 2,
+        excludeIds = dead).collect()
+      assert(afterDel.forall(_.getLong(2) != victim), codec)
+      assert(afterDel.groupBy(_.getLong(0)).values.forall(_.length == 3), codec)
+
+      // auto floor: every query serves a full top-3 of allowed candidates
+      // under the sharp predicate, with and without a takedown list
+      for (ex <- Seq(None, dead)) {
+        val rs = VectorIndexStream.filteredTopKFromIndex(
+          spark, idx, q, "vec_id", "embedding", sharpIds, k = 3,
+          minCandidates = 20L, excludeIds = ex).collect()
+        assert(rs.forall(r => sharpAllowed(r.getLong(2))), codec)
+        assert(rs.groupBy(_.getLong(0)).values.forall(_.length == 3), codec)
+      }
     }
   }
 
@@ -1449,10 +1324,11 @@ class VectorIndexStreamSpec extends SparkSpec {
     val odds = e.filter(col("vec_id") % 2 === 1)
     val dir = java.nio.file.Files.createTempDirectory("vec_clamp").toString
     val idx = s"$dir/index"
-    VectorIndexStream.seedSq8Index(
-      e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx, nLists = 8)
-    VectorIndexStream.appendSq8Batch(odds, "vec_id", "embedding", idx, 0L)
-    VectorIndexStream.appendSq8Batch(
+    VectorIndexStream.seedIndex(
+      e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx, nLists = 8,
+      codec = VectorCodec.Sq8)
+    VectorIndexStream.appendBatch(odds, "vec_id", "embedding", idx, 0L)
+    VectorIndexStream.appendBatch(
       odds.withColumn("embedding", transform(col("embedding"), x => x + x)),
       "vec_id", "embedding", idx, 1L)
     val rows = VectorIndexStream.sq8BoundaryReport(spark, idx).collect()
@@ -1517,81 +1393,93 @@ class VectorIndexStreamSpec extends SparkSpec {
 
     // a quantized store refuses the rebuild (codes, not vectors)
     val sq8 = s"$dir/sq8"
-    VectorIndexStream.seedSq8Index(
-      e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", sq8, nLists = 8)
+    VectorIndexStream.seedIndex(
+      e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", sq8, nLists = 8,
+      codec = VectorCodec.Sq8)
     val refused = intercept[IllegalStateException] {
       VectorIndexStream.rebuildIndex(spark, sq8, s"$dir/sq8b", "vec_id", "embedding")
     }
     assert(refused.getMessage.contains("codes, not vectors"), refused.getMessage)
   }
 
-  test("rebuildSq8Index: re-ingests the live corpus from the SOURCE, " +
-      "retrains the grid, clears the boundary gauge; missing live ids refuse") {
-    val spark2 = spark
-    import spark2.implicits._
+  test("rebuildIndex from the source corpus, every codec: live ids once each, " +
+      "serving parity with a fresh seed, old store untouched, missing live ids refuse") {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val evens = e.filter(col("vec_id") % 2 === 0)
     val odds = e.filter(col("vec_id") % 2 === 1)
     val doubledOdds =
       odds.withColumn("embedding", transform(col("embedding"), x => x + x))
-    val dir = java.nio.file.Files.createTempDirectory("sq8_rebuild").toString
-    val idx = s"$dir/index"; val idx2 = s"$dir/rebuilt"
-    // q277's drift fixture + a takedown: grid pinned on evens, odd
-    // batch 0 in-range, doubled odd batch 1 escapes the grid
-    VectorIndexStream.seedSq8Index(evens, "vec_id", "embedding", idx, nLists = 8)
-    VectorIndexStream.appendSq8Batch(odds, "vec_id", "embedding", idx, 0L)
-    VectorIndexStream.appendSq8Batch(doubledOdds, "vec_id", "embedding", idx, 1L)
-    VectorIndexStream.deleteBatch(spark, idx,
-      e.filter(col("vec_id") % 10 === 5).select(col("vec_id")),
-      "vec_id", batchId = 2L)
-    val drifted = VectorIndexStream.sq8BoundaryReport(spark, idx)
-      .filter(col("batch") === 1L).collect()
-    assert(drifted.length == 1 &&
-      drifted(0).getAs[Boolean]("regrid_recommended"))
-
     // the source corpus is the upstream truth: evens original, odds at
     // their latest (doubled) values
     val source = evens.select(col("vec_id"), col("embedding"))
       .unionByName(doubledOdds.select(col("vec_id"), col("embedding")))
-    intercept[IllegalArgumentException] {
-      VectorIndexStream.rebuildSq8Index(spark, idx, idx, source,
-        "vec_id", "embedding")
-    }
-    VectorIndexStream.rebuildSq8Index(spark, idx, idx2, source,
-      "vec_id", "embedding", nLists = 8)
-
-    // the rebuilt store holds exactly the live ids, once each
-    val ids = VectorIndexStream.readCells(spark, idx2)
-      .select("vec_id").collect().map(_.getLong(0))
-    assert(ids.length == ids.distinct.length && !ids.exists(_ % 10 == 5))
-    // serving parity with a by-hand fresh seed over the live corpus
     val live = source.filter(col("vec_id") % 10 =!= 5)
-    val byHand = s"$dir/byhand"
-    VectorIndexStream.seedSq8Index(live, "vec_id", "embedding", byHand,
-      nLists = 8)
     val q = e.filter(col("vec_id") % 50 === 0)
-    def served(d: String) = VectorIndexStream.sq8TopKFromIndex(
-        spark, d, q, "vec_id", "embedding", k = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(served(idx2) == served(byHand))
-    // the gauge CLEARS: a re-encoded batch of the same drifted
-    // distribution reads at the retrained grid's own baseline
-    VectorIndexStream.appendSq8Batch(live, "vec_id", "embedding", idx2, 0L)
-    val cleared = VectorIndexStream.sq8BoundaryReport(spark, idx2)
-      .filter(col("batch") === 0L).collect()
-    assert(cleared.length == 1 &&
-      !cleared(0).getAs[Boolean]("regrid_recommended"), cleared.mkString)
-
-    // a live id missing from the source refuses loudly at execution —
-    // the rebuild must never silently drop a vector the store serves
-    val ex = intercept[Exception] {
-      VectorIndexStream.rebuildSq8Index(spark, idx, s"$dir/partial",
-        source.filter(col("vec_id") =!= 1L), "vec_id", "embedding")
-    }
     def rootMsg(t: Throwable): String =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
         .map(x => Option(x.getMessage).getOrElse("")).mkString(" | ")
-    assert(rootMsg(ex).contains("missing from the source corpus"), rootMsg(ex))
+
+    for (codec <- codecs) {
+      val dir = java.nio.file.Files.createTempDirectory("source_rebuild").toString
+      val idx = s"$dir/index"; val idx2 = s"$dir/rebuilt"
+      // q277's drift fixture + a takedown: artifacts pinned on evens, odd
+      // batch 0 in-range, doubled odd batch 1 escapes the SQ8 grid
+      VectorIndexStream.seedIndex(evens, "vec_id", "embedding", idx,
+        nLists = 8, codec = codec)
+      VectorIndexStream.appendBatch(odds, "vec_id", "embedding", idx, 0L)
+      VectorIndexStream.appendBatch(doubledOdds, "vec_id", "embedding", idx, 1L)
+      VectorIndexStream.deleteBatch(spark, idx,
+        e.filter(col("vec_id") % 10 === 5).select(col("vec_id")),
+        "vec_id", batchId = 2L)
+      if (codec == VectorCodec.Sq8) {
+        val drifted = VectorIndexStream.sq8BoundaryReport(spark, idx)
+          .filter(col("batch") === 1L).collect()
+        assert(drifted.length == 1 &&
+          drifted(0).getAs[Boolean]("regrid_recommended"))
+      }
+
+      intercept[IllegalArgumentException] {
+        VectorIndexStream.rebuildIndex(spark, idx, idx, "vec_id", "embedding",
+          sourceCorpus = Some(source))
+      }
+      VectorIndexStream.rebuildIndex(spark, idx, idx2, "vec_id", "embedding",
+        nLists = 8, sourceCorpus = Some(source))
+
+      // the rebuilt store keeps the codec and holds exactly the live ids,
+      // once each
+      val ids = VectorIndexStream.readCells(spark, idx2)
+        .select("vec_id").collect().map(_.getLong(0))
+      assert(ids.length == ids.distinct.length && !ids.exists(_ % 10 == 5), codec)
+      assert(ids.toSet == live.select("vec_id").collect().map(_.getLong(0)).toSet)
+      // serving parity with a by-hand fresh seed over the live corpus:
+      // every artifact retrained on it
+      val byHand = s"$dir/byhand"
+      VectorIndexStream.seedIndex(live, "vec_id", "embedding", byHand,
+        nLists = 8, codec = codec)
+      def served(d: String) = rows(VectorIndexStream.topKFromIndex(
+        spark, d, q, "vec_id", "embedding", k = 3))
+      assert(served(idx2) == served(byHand), codec)
+      // the old store is untouched (as-of generation for pinned reads)
+      assert(VectorIndexStream.readCells(spark, idx).count() >
+        VectorIndexStream.readCells(spark, idx2).count(), codec)
+      if (codec == VectorCodec.Sq8) {
+        // the gauge CLEARS: a re-encoded batch of the same drifted
+        // distribution reads at the retrained grid's own baseline
+        VectorIndexStream.appendBatch(live, "vec_id", "embedding", idx2, 0L)
+        val cleared = VectorIndexStream.sq8BoundaryReport(spark, idx2)
+          .filter(col("batch") === 0L).collect()
+        assert(cleared.length == 1 &&
+          !cleared(0).getAs[Boolean]("regrid_recommended"), cleared.mkString)
+      }
+
+      // a live id missing from the source refuses loudly at execution —
+      // the rebuild must never silently drop a vector the store serves
+      val ex = intercept[Exception] {
+        VectorIndexStream.rebuildIndex(spark, idx, s"$dir/partial",
+          "vec_id", "embedding", sourceCorpus = Some(source.filter(col("vec_id") =!= 1L)))
+      }
+      assert(rootMsg(ex).contains("missing from the source corpus"), rootMsg(ex))
+    }
   }
 
   test("a recovered crash's stamps-only tombstone dir reads as NO deletes " +
@@ -1636,11 +1524,11 @@ class VectorIndexStreamSpec extends SparkSpec {
     val odds = e.filter(col("vec_id") % 2 === 1)
     val dir = java.nio.file.Files.createTempDirectory("pq_code_drift").toString
     val idx = s"$dir/index"
-    VectorIndexStream.seedPqIndex(
+    VectorIndexStream.seedIndex(
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
-      nLists = 8, m = 8, dim = 64, kCent = 16)
-    VectorIndexStream.appendPqBatch(odds, "vec_id", "embedding", idx, 0L)
-    VectorIndexStream.appendPqBatch(
+      nLists = 8, codec = VectorCodec.Pq(m = 8, kCent = 16))
+    VectorIndexStream.appendBatch(odds, "vec_id", "embedding", idx, 0L)
+    VectorIndexStream.appendBatch(
       odds.withColumn("embedding",
         transform(col("embedding"), _ => lit(0.0f))),
       "vec_id", "embedding", idx, 1L)
@@ -1673,35 +1561,66 @@ class VectorIndexStreamSpec extends SparkSpec {
     assert(rootMsg(ex).contains("no seed partition"), rootMsg(ex))
   }
 
-  test("rebuildPqIndex: source re-ingest retrains grid AND codebook; " +
-      "serving parity with a fresh seed over the live corpus") {
+
+  /** A 32-wide vector against a 64-wide index must fail loudly: the
+    * vector kernels take the minimum of the two lengths, so it would
+    * otherwise rank on a truncated prefix. */
+  private def assertWidthRefused(what: String)(f: => Any): Unit = {
+    val ex = intercept[Exception](f)
+    val chain = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toList
+    assert(chain.exists(_.contains("does not match the 64-dimension grid")),
+      s"$what: ${chain.mkString(" | ")}")
+  }
+
+  /** A fifth of the fixture: enough for every codec's artifacts. */
+  private def sample(e: DataFrame): DataFrame = e.filter(col("vec_id") % 5 === 0)
+
+  private def narrowVectors: DataFrame = {
     val spark2 = spark
     import spark2.implicits._
+    Seq((9001L, Array.fill(32)(0.5f))).toDF("vec_id", "embedding")
+  }
+
+  test("every codec's streamed append refuses a vector of the wrong width") {
     val e = graft.Tables.table(spark, sf001, "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("pq_rebuild").toString
-    val idx = s"$dir/index"; val idx2 = s"$dir/rebuilt"
-    VectorIndexStream.seedPqIndex(
-      e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
-      nLists = 8, m = 8, dim = 64, kCent = 16)
-    VectorIndexStream.appendPqBatch(
-      e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
-    VectorIndexStream.deleteBatch(spark, idx,
-      e.filter(col("vec_id") % 10 === 5).select(col("vec_id")),
-      "vec_id", batchId = 1L)
-    VectorIndexStream.rebuildPqIndex(spark, idx, idx2,
-      e.select(col("vec_id"), col("embedding")), "vec_id", "embedding",
-      nLists = 8, m = 8, dim = 64, kCent = 16)
-    val byHand = s"$dir/byhand"
-    VectorIndexStream.seedPqIndex(
-      e.filter(col("vec_id") % 10 =!= 5), "vec_id", "embedding", byHand,
-      nLists = 8, m = 8, dim = 64, kCent = 16)
-    val q = e.filter(col("vec_id") % 50 === 0)
-    def served(d: String) = VectorIndexStream.pqTopKFromIndex(
-        spark, d, q, "vec_id", "embedding", k = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(served(idx2) == served(byHand))
-    // the old store is untouched (as-of generation for pinned reads)
-    assert(VectorIndexStream.readCells(spark, idx).count() >
-      VectorIndexStream.readCells(spark, idx2).count())
+    for (codec <- codecs) {
+      val idx = java.nio.file.Files.createTempDirectory("vec_width_append").toString + "/index"
+      VectorIndexStream.seedIndex(sample(e), "vec_id", "embedding", idx,
+        nLists = 8, codec = codec)
+      assertWidthRefused(s"$codec append") {
+        VectorIndexStream.appendBatch(narrowVectors, "vec_id", "embedding", idx, 0L)
+      }
+    }
+  }
+
+  test("every codec's streamed probes refuse a query of the wrong width") {
+    val e = graft.Tables.table(spark, sf001, "embeddings")
+    for (codec <- codecs) {
+      val idx = java.nio.file.Files.createTempDirectory("vec_width_probe").toString + "/index"
+      VectorIndexStream.seedIndex(sample(e), "vec_id", "embedding", idx,
+        nLists = 8, codec = codec)
+      assertWidthRefused(s"$codec topKFromIndex") {
+        VectorIndexStream.topKFromIndex(
+          spark, idx, narrowVectors, "vec_id", "embedding", k = 3).collect()
+      }
+      assertWidthRefused(s"$codec filteredTopKFromIndex") {
+        VectorIndexStream.filteredTopKFromIndex(spark, idx, narrowVectors,
+          "vec_id", "embedding", sample(e).select(col("vec_id")), k = 3).collect()
+      }
+    }
+  }
+
+  test("every codec's written-index reader refuses a query of the wrong width") {
+    val e = graft.Tables.table(spark, sf001, "embeddings")
+    for (codec <- codecs) {
+      val out = java.nio.file.Files.createTempDirectory("ivf_width").toString
+      graft.sinks.CorpusSink.writeIvfIndex(sample(e), "vec_id", "embedding", out,
+        nLists = 8, codec = codec)
+      assertWidthRefused(s"$codec ivfTopKFromIndex") {
+        Similarity.ivfTopKFromIndex(
+          spark, out, narrowVectors, "vec_id", "embedding", k = 3).collect()
+      }
+    }
   }
 }
