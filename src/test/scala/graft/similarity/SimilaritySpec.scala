@@ -1,5 +1,6 @@
 package graft.similarity
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -193,38 +194,46 @@ class SimilaritySpec extends SparkSpec {
     assert(out.toSeq == again.toSeq)                  // deterministic
   }
 
-  test("ivfSq8TopK/ivfPqTopK: neighbors stay in the query's cell, ranked by " +
-      "(dist, id), dists agree with the flat quantized kernel") {
+  /** IVF-quantized top-k over sf001: neighbors stay in the query's cell,
+    * ranks follow (dist, id), and each dist is the number `flatKernel`
+    * (the same kernel over the whole corpus) computes for the pair. */
+  private def ivfQuantizedStaysInCell(name: String,
+      ivf: (DataFrame, DataFrame) => DataFrame,
+      flatKernel: (DataFrame, DataFrame, Int) => DataFrame): Unit = {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val q = e.filter(col("vec_id") % 50 === 0)
     val cells = Similarity.ivfAssignCells(e, "vec_id", "embedding", nLists = 8)
       .select("vec_id", "cell").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    def quads(df: org.apache.spark.sql.DataFrame) =
+    def quads(df: DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    // (codec, IVF operator, the same kernel over the whole corpus)
-    val table = Seq[(String, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
-      ("sq8", Similarity.ivfSq8TopK(e, q, "vec_id", "embedding", k = 3, nLists = 8),
-        Similarity.sq8TopK(e, q, "vec_id", "embedding", k = e.count().toInt)),
-      ("pq", Similarity.ivfPqTopK(e, q, "vec_id", "embedding", k = 3),
-        Similarity.pqTopK(e, q, "vec_id", "embedding", k = e.count().toInt)))
-    for ((name, ivf, flatKernel) <- table) {
-      val out = quads(ivf)
-      assert(out.nonEmpty, name)
-      out.foreach { case (qid, _, nid, _) =>
-        assert(cells(nid) == cells(qid), s"$name: neighbor $nid outside query $qid's cell")
-      }
-      // within a query, rank order is by (dist, id)
-      out.groupBy(_._1).foreach { case (_, rows) =>
-        val sorted = rows.sortBy(_._2)
-        assert(sorted.map(r => (r._4, r._3)).sameElements(
-          sorted.map(r => (r._4, r._3)).sorted), s"$name ranks not by (dist,id): $sorted")
-      }
-      // the IVF distance is the same number the flat kernel computes
-      val flat = quads(flatKernel).map(r => (r._1, r._3) -> r._4).toMap
-      out.foreach { case (qid, _, nid, d) =>
-        assert(flat((qid, nid)) == d, s"ivf-$name dist differs from flat $name for ($qid,$nid)")
-      }
+    val out = quads(ivf(e, q))
+    assert(out.nonEmpty, name)
+    out.foreach { case (qid, _, nid, _) =>
+      assert(cells(nid) == cells(qid), s"$name: neighbor $nid outside query $qid's cell")
     }
+    // within a query, rank order is by (dist, id)
+    out.groupBy(_._1).foreach { case (_, rows) =>
+      val sorted = rows.sortBy(_._2)
+      assert(sorted.map(r => (r._4, r._3)).sameElements(
+        sorted.map(r => (r._4, r._3)).sorted), s"$name ranks not by (dist,id): $sorted")
+    }
+    // the IVF distance is the same number the flat kernel computes
+    val flat = quads(flatKernel(e, q, e.count().toInt)).map(r => (r._1, r._3) -> r._4).toMap
+    out.foreach { case (qid, _, nid, d) =>
+      assert(flat((qid, nid)) == d, s"ivf-$name dist differs from flat $name for ($qid,$nid)")
+    }
+  }
+
+  test("ivfSq8TopK: neighbors come from the query's cell, ranked by quantized distance") {
+    ivfQuantizedStaysInCell("sq8",
+      (e, q) => Similarity.ivfSq8TopK(e, q, "vec_id", "embedding", k = 3, nLists = 8),
+      (e, q, k) => Similarity.sq8TopK(e, q, "vec_id", "embedding", k = k))
+  }
+
+  test("ivfPqTopK: neighbors stay in the query's cell, dists agree with flat PQ") {
+    ivfQuantizedStaysInCell("pq",
+      (e, q) => Similarity.ivfPqTopK(e, q, "vec_id", "embedding", k = 3),
+      (e, q, k) => Similarity.pqTopK(e, q, "vec_id", "embedding", k = k))
   }
 
   test("ivfMultiProbeTopK: wider candidate pool, never worse recall than single probe") {

@@ -112,8 +112,12 @@ class VectorIndexStreamSpec extends SparkSpec {
     assert(e2.getMessage.contains("cent_id"))
   }
 
-  test("streamed appends == batch backfill; fences pin history; replay converges") {
-    import spark.implicits._
+  /** Streams two batches into a store of `codec` and checks it against a
+    * one-batch backfill twin, a seed-only fence, an in-place replay and a
+    * compaction (old batches fold into the seed; the newest is refused). */
+  private def streamedLifecycle(codec: VectorCodec): Unit = {
+    val spark2 = spark
+    import spark2.implicits._
     implicit val sqlCtx = spark.sqlContext
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val seedHalf = e.filter(col("vec_id") % 2 === 0)
@@ -126,68 +130,78 @@ class VectorIndexStreamSpec extends SparkSpec {
       .as[(Long, Array[Float])].collect().toSeq
       .toDF("vec_id", "embedding")
 
-    for (codec <- codecs) {
-      def seeded(dir: String): String = {
-        VectorIndexStream.seedIndex(seedHalf, "vec_id", "embedding", s"$dir/index",
-          nLists = 8, codec = codec)
-        s"$dir/index"
-      }
-      def tmp(name: String) = java.nio.file.Files.createTempDirectory(name).toString
-      def served(idx: String, beforeBatch: Long = Long.MaxValue) =
-        rows(VectorIndexStream.topKFromIndex(spark, idx, queries, "vec_id",
-          "embedding", k = 3, beforeBatch = beforeBatch))
-
-      val dir = tmp("vec_index_stream")
-      val idx = seeded(dir)
-      val in = MemoryStream[(Long, Array[Float])]
-      val q = VectorIndexStream.indexStreamTo(
-        in.toDF().toDF("vec_id", "embedding"),
-        "vec_id", "embedding", idx, s"$dir/ckpt")().start()
-      try {
-        in.addData(b0: _*); q.processAllAvailable()
-        in.addData(b1: _*); q.processAllAvailable()
-      } finally q.stop()
-
-      // stored artifacts only, statically pruned to the probed cells
-      // (the batch fence rides in PartitionFilters too)
-      val plan = VectorIndexStream.topKFromIndex(spark, idx, queries,
-        "vec_id", "embedding", k = 3).queryExecution.executedPlan.toString
-      assert(!plan.contains("embeddings.parquet"), s"$codec: $plan")
-      assert("PartitionFilters: \\[[^\\]]*cell[^\\]]* IN \\(".r
-        .findFirstIn(plan).isDefined, s"$codec: $plan")
-
-      // twin: same seed, all streamed rows as ONE backfill batch — batch
-      // boundaries must not affect what the index serves
-      val full = served(idx)
-      val twin = seeded(tmp("vec_index_twin"))
-      VectorIndexStream.appendBatch(
-        odd.toDF("vec_id", "embedding"), "vec_id", "embedding", twin, 0L)
-      assert(full == served(twin), codec)
-      assert(full.nonEmpty, codec)
-
-      // fence: beforeBatch = 0 sees only the seed
-      val fenced = served(idx, beforeBatch = 0)
-      assert(fenced == served(seeded(tmp("vec_index_seedonly"))), codec)
-      assert(fenced != full, codec) // streamed vectors genuinely changed answers
-
-      // replay: re-appending batch 1's rows AS batch 1 overwrites in place
-      VectorIndexStream.appendBatch(
-        b1.toDF("vec_id", "embedding"), "vec_id", "embedding", idx, 1L)
-      assert(served(idx) == full, codec)
-
-      // compaction folds old batches into the seed without changing what
-      // any future fence reads, whatever the payload; folding the NEWEST
-      // batch is refused
-      val ex = intercept[IllegalArgumentException] {
-        VectorIndexStream.compactIndex(spark, idx, throughBatch = 1)
-      }
-      assert(ex.getMessage.contains("newest"), ex.getMessage)
-      VectorIndexStream.compactIndex(spark, idx, throughBatch = 0)
-      val batchDirs = new java.io.File(s"$idx/cells").listFiles()
-        .filter(_.isDirectory).map(_.getName).filter(_.startsWith("batch=")).toSet
-      assert(batchDirs == Set("batch=-1", "batch=1"), s"$codec: $batchDirs")
-      assert(served(idx) == full, codec)
+    def seeded(dir: String): String = {
+      VectorIndexStream.seedIndex(seedHalf, "vec_id", "embedding", s"$dir/index",
+        nLists = 8, codec = codec)
+      s"$dir/index"
     }
+    def tmp(name: String) = java.nio.file.Files.createTempDirectory(name).toString
+    def served(idx: String, beforeBatch: Long = Long.MaxValue) =
+      rows(VectorIndexStream.topKFromIndex(spark, idx, queries, "vec_id",
+        "embedding", k = 3, beforeBatch = beforeBatch))
+
+    val dir = tmp("vec_index_stream")
+    val idx = seeded(dir)
+    val in = MemoryStream[(Long, Array[Float])]
+    val q = VectorIndexStream.indexStreamTo(
+      in.toDF().toDF("vec_id", "embedding"),
+      "vec_id", "embedding", idx, s"$dir/ckpt")().start()
+    try {
+      in.addData(b0: _*); q.processAllAvailable()
+      in.addData(b1: _*); q.processAllAvailable()
+    } finally q.stop()
+
+    // stored artifacts only, statically pruned to the probed cells
+    // (the batch fence rides in PartitionFilters too)
+    val plan = VectorIndexStream.topKFromIndex(spark, idx, queries,
+      "vec_id", "embedding", k = 3).queryExecution.executedPlan.toString
+    assert(!plan.contains("embeddings.parquet"), s"$codec: $plan")
+    assert("PartitionFilters: \\[[^\\]]*cell[^\\]]* IN \\(".r
+      .findFirstIn(plan).isDefined, s"$codec: $plan")
+
+    // twin: same seed, all streamed rows as ONE backfill batch — batch
+    // boundaries must not affect what the index serves
+    val full = served(idx)
+    val twin = seeded(tmp("vec_index_twin"))
+    VectorIndexStream.appendBatch(
+      odd.toDF("vec_id", "embedding"), "vec_id", "embedding", twin, 0L)
+    assert(full == served(twin), codec)
+    assert(full.nonEmpty, codec)
+
+    // fence: beforeBatch = 0 sees only the seed
+    val fenced = served(idx, beforeBatch = 0)
+    assert(fenced == served(seeded(tmp("vec_index_seedonly"))), codec)
+    assert(fenced != full, codec) // streamed vectors genuinely changed answers
+
+    // replay: re-appending batch 1's rows AS batch 1 overwrites in place
+    VectorIndexStream.appendBatch(
+      b1.toDF("vec_id", "embedding"), "vec_id", "embedding", idx, 1L)
+    assert(served(idx) == full, codec)
+
+    // compaction folds old batches into the seed without changing what
+    // any future fence reads, whatever the payload; folding the NEWEST
+    // batch is refused
+    val ex = intercept[IllegalArgumentException] {
+      VectorIndexStream.compactIndex(spark, idx, throughBatch = 1)
+    }
+    assert(ex.getMessage.contains("newest"), ex.getMessage)
+    VectorIndexStream.compactIndex(spark, idx, throughBatch = 0)
+    val batchDirs = new java.io.File(s"$idx/cells").listFiles()
+      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("batch=")).toSet
+    assert(batchDirs == Set("batch=-1", "batch=1"), s"$codec: $batchDirs")
+    assert(served(idx) == full, codec)
+  }
+
+  test("streamed appends == batch backfill; fences pin history; replay converges") {
+    streamedLifecycle(VectorCodec.Flat)
+  }
+
+  test("SQ8 store lifecycle: streamed batches == one-batch backfill; compaction preserves answers") {
+    streamedLifecycle(VectorCodec.Sq8)
+  }
+
+  test("PQ store: streamed code cells == one-batch backfill; pruned plan; fence works (q107)") {
+    streamedLifecycle(VectorCodec.Pq())
   }
 
   test("SQ8 store: streamed quantized cells rank exactly as the pinned-grid fused kernel (q106)") {
@@ -1402,8 +1416,11 @@ class VectorIndexStreamSpec extends SparkSpec {
     assert(refused.getMessage.contains("codes, not vectors"), refused.getMessage)
   }
 
-  test("rebuildIndex from the source corpus, every codec: live ids once each, " +
-      "serving parity with a fresh seed, old store untouched, missing live ids refuse") {
+  /** Rebuilds a drifted, takedown-carrying store of `codec` from the
+    * source corpus: live ids once each, serving parity with a fresh seed
+    * over the live corpus, the old store untouched, missing live ids
+    * refused; for SQ8 the boundary gauge fires before and clears after. */
+  private def sourceRebuild(codec: VectorCodec): Unit = {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val evens = e.filter(col("vec_id") % 2 === 0)
     val odds = e.filter(col("vec_id") % 2 === 1)
@@ -1419,67 +1436,80 @@ class VectorIndexStreamSpec extends SparkSpec {
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
         .map(x => Option(x.getMessage).getOrElse("")).mkString(" | ")
 
-    for (codec <- codecs) {
-      val dir = java.nio.file.Files.createTempDirectory("source_rebuild").toString
-      val idx = s"$dir/index"; val idx2 = s"$dir/rebuilt"
-      // q277's drift fixture + a takedown: artifacts pinned on evens, odd
-      // batch 0 in-range, doubled odd batch 1 escapes the SQ8 grid
-      VectorIndexStream.seedIndex(evens, "vec_id", "embedding", idx,
-        nLists = 8, codec = codec)
-      VectorIndexStream.appendBatch(odds, "vec_id", "embedding", idx, 0L)
-      VectorIndexStream.appendBatch(doubledOdds, "vec_id", "embedding", idx, 1L)
-      VectorIndexStream.deleteBatch(spark, idx,
-        e.filter(col("vec_id") % 10 === 5).select(col("vec_id")),
-        "vec_id", batchId = 2L)
-      if (codec == VectorCodec.Sq8) {
-        val drifted = VectorIndexStream.sq8BoundaryReport(spark, idx)
-          .filter(col("batch") === 1L).collect()
-        assert(drifted.length == 1 &&
-          drifted(0).getAs[Boolean]("regrid_recommended"))
-      }
-
-      intercept[IllegalArgumentException] {
-        VectorIndexStream.rebuildIndex(spark, idx, idx, "vec_id", "embedding",
-          sourceCorpus = Some(source))
-      }
-      VectorIndexStream.rebuildIndex(spark, idx, idx2, "vec_id", "embedding",
-        nLists = 8, sourceCorpus = Some(source))
-
-      // the rebuilt store keeps the codec and holds exactly the live ids,
-      // once each
-      val ids = VectorIndexStream.readCells(spark, idx2)
-        .select("vec_id").collect().map(_.getLong(0))
-      assert(ids.length == ids.distinct.length && !ids.exists(_ % 10 == 5), codec)
-      assert(ids.toSet == live.select("vec_id").collect().map(_.getLong(0)).toSet)
-      // serving parity with a by-hand fresh seed over the live corpus:
-      // every artifact retrained on it
-      val byHand = s"$dir/byhand"
-      VectorIndexStream.seedIndex(live, "vec_id", "embedding", byHand,
-        nLists = 8, codec = codec)
-      def served(d: String) = rows(VectorIndexStream.topKFromIndex(
-        spark, d, q, "vec_id", "embedding", k = 3))
-      assert(served(idx2) == served(byHand), codec)
-      // the old store is untouched (as-of generation for pinned reads)
-      assert(VectorIndexStream.readCells(spark, idx).count() >
-        VectorIndexStream.readCells(spark, idx2).count(), codec)
-      if (codec == VectorCodec.Sq8) {
-        // the gauge CLEARS: a re-encoded batch of the same drifted
-        // distribution reads at the retrained grid's own baseline
-        VectorIndexStream.appendBatch(live, "vec_id", "embedding", idx2, 0L)
-        val cleared = VectorIndexStream.sq8BoundaryReport(spark, idx2)
-          .filter(col("batch") === 0L).collect()
-        assert(cleared.length == 1 &&
-          !cleared(0).getAs[Boolean]("regrid_recommended"), cleared.mkString)
-      }
-
-      // a live id missing from the source refuses loudly at execution —
-      // the rebuild must never silently drop a vector the store serves
-      val ex = intercept[Exception] {
-        VectorIndexStream.rebuildIndex(spark, idx, s"$dir/partial",
-          "vec_id", "embedding", sourceCorpus = Some(source.filter(col("vec_id") =!= 1L)))
-      }
-      assert(rootMsg(ex).contains("missing from the source corpus"), rootMsg(ex))
+    val dir = java.nio.file.Files.createTempDirectory("source_rebuild").toString
+    val idx = s"$dir/index"; val idx2 = s"$dir/rebuilt"
+    // q277's drift fixture + a takedown: artifacts pinned on evens, odd
+    // batch 0 in-range, doubled odd batch 1 escapes the SQ8 grid
+    VectorIndexStream.seedIndex(evens, "vec_id", "embedding", idx,
+      nLists = 8, codec = codec)
+    VectorIndexStream.appendBatch(odds, "vec_id", "embedding", idx, 0L)
+    VectorIndexStream.appendBatch(doubledOdds, "vec_id", "embedding", idx, 1L)
+    VectorIndexStream.deleteBatch(spark, idx,
+      e.filter(col("vec_id") % 10 === 5).select(col("vec_id")),
+      "vec_id", batchId = 2L)
+    if (codec == VectorCodec.Sq8) {
+      val drifted = VectorIndexStream.sq8BoundaryReport(spark, idx)
+        .filter(col("batch") === 1L).collect()
+      assert(drifted.length == 1 &&
+        drifted(0).getAs[Boolean]("regrid_recommended"))
     }
+
+    intercept[IllegalArgumentException] {
+      VectorIndexStream.rebuildIndex(spark, idx, idx, "vec_id", "embedding",
+        sourceCorpus = Some(source))
+    }
+    VectorIndexStream.rebuildIndex(spark, idx, idx2, "vec_id", "embedding",
+      nLists = 8, sourceCorpus = Some(source))
+
+    // the rebuilt store keeps the codec and holds exactly the live ids,
+    // once each
+    val ids = VectorIndexStream.readCells(spark, idx2)
+      .select("vec_id").collect().map(_.getLong(0))
+    assert(ids.length == ids.distinct.length && !ids.exists(_ % 10 == 5), codec)
+    assert(ids.toSet == live.select("vec_id").collect().map(_.getLong(0)).toSet)
+    // serving parity with a by-hand fresh seed over the live corpus:
+    // every artifact retrained on it
+    val byHand = s"$dir/byhand"
+    VectorIndexStream.seedIndex(live, "vec_id", "embedding", byHand,
+      nLists = 8, codec = codec)
+    def served(d: String) = rows(VectorIndexStream.topKFromIndex(
+      spark, d, q, "vec_id", "embedding", k = 3))
+    assert(served(idx2) == served(byHand), codec)
+    // the old store is untouched (as-of generation for pinned reads)
+    assert(VectorIndexStream.readCells(spark, idx).count() >
+      VectorIndexStream.readCells(spark, idx2).count(), codec)
+    if (codec == VectorCodec.Sq8) {
+      // the gauge CLEARS: a re-encoded batch of the same drifted
+      // distribution reads at the retrained grid's own baseline
+      VectorIndexStream.appendBatch(live, "vec_id", "embedding", idx2, 0L)
+      val cleared = VectorIndexStream.sq8BoundaryReport(spark, idx2)
+        .filter(col("batch") === 0L).collect()
+      assert(cleared.length == 1 &&
+        !cleared(0).getAs[Boolean]("regrid_recommended"), cleared.mkString)
+    }
+
+    // a live id missing from the source refuses loudly at execution —
+    // the rebuild must never silently drop a vector the store serves
+    val ex = intercept[Exception] {
+      VectorIndexStream.rebuildIndex(spark, idx, s"$dir/partial",
+        "vec_id", "embedding", sourceCorpus = Some(source.filter(col("vec_id") =!= 1L)))
+    }
+    assert(rootMsg(ex).contains("missing from the source corpus"), rootMsg(ex))
+  }
+
+  test("rebuildIndex from the source corpus, flat store: live ids once each, " +
+      "serving parity with a fresh seed, old store untouched, missing live ids refuse") {
+    sourceRebuild(VectorCodec.Flat)
+  }
+
+  test("rebuildSq8Index: re-ingests the live corpus from the SOURCE, " +
+      "retrains the grid, clears the boundary gauge; missing live ids refuse") {
+    sourceRebuild(VectorCodec.Sq8)
+  }
+
+  test("rebuildPqIndex: source re-ingest retrains grid AND codebook; " +
+      "serving parity with a fresh seed over the live corpus") {
+    sourceRebuild(VectorCodec.Pq())
   }
 
   test("a recovered crash's stamps-only tombstone dir reads as NO deletes " +
